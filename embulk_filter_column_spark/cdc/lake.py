@@ -40,12 +40,16 @@ from ..fsio import io_for
 from .dedup import last_writer_wins, salted_last_writer_wins
 
 OP_COL = "_op"
+# per-key event count the merge's LWW aggregate carries up to its
+# Observation (dropped before anything is written)
+_KEY_EVENTS = "_key_events"
 
 
 class MergeResult:
     def __init__(self, batch_id: int, snapshot_id: int, skipped: bool,
                  rows_in: int = 0, winners: int = 0, tombstones: int = 0,
-                 buckets_touched: int = 0):
+                 buckets_touched: int = 0,
+                 top_key_events: int | None = None):
         self.batch_id = batch_id
         self.snapshot_id = snapshot_id
         self.skipped = skipped
@@ -53,6 +57,11 @@ class MergeResult:
         self.winners = winners
         self.tombstones = tombstones
         self.buckets_touched = buckets_touched
+        # events of the batch's most frequent key (None: not observed —
+        # a skipped or empty merge, or a sink that does not report it);
+        # CDCPipeline's n_salts="auto" salts the next batch on
+        # top_key_events / rows_in
+        self.top_key_events = top_key_events
 
     def __repr__(self) -> str:  # pragma: no cover
         return ("MergeResult(batch=%d snap=%d skipped=%s in=%d winners=%d "
@@ -234,12 +243,18 @@ class LakeTable:
     # -- read ----------------------------------------------------------------
 
     def _read_files(self, groups: dict, manifest: dict) -> DataFrame | None:
-        """groups: schema_id -> [paths]; returns aligned union or None."""
+        """groups: schema_id -> [paths]; returns aligned union or None.
+        Files are read under the manifest's schema for their version
+        (plus the tombstone flag) — parquet schema inference would cost
+        a Spark job per group — and a column a batch lacked reads as
+        NULL, as ``_align`` fills it."""
         parts = []
         for sid, paths in groups.items():
             if not paths:
                 continue
-            df = self.spark.read.parquet(*paths)
+            written = T.StructType.fromJson(manifest["schemas"][str(sid)])
+            written = written.add(OP_COL, T.StringType())
+            df = self.spark.read.schema(written).parquet(*paths)
             parts.append(self._align(df, int(sid), manifest))
         if not parts:
             return None
@@ -474,40 +489,42 @@ class LakeTable:
 
         bucket_expr = F.pmod(F.xxhash64(F.col(key)), F.lit(nbuckets)) \
             .cast("int")
-        obs_in = None
         if mode == "delta":
             # delta commits never read existing buckets, so `touched`
             # is not needed BEFORE the write — it is derived from the
-            # written bucket directories afterwards, and rows_in rides
-            # an Observation on the batch source. A delta merge is
-            # therefore exactly ONE Spark job per batch (the write) —
-            # the shape a trickle/streaming ingest wants.
+            # written bucket directories afterwards. The merge's job
+            # group then holds only the write query: under AQE its
+            # upstream shuffles (the LWW aggregate, the repartition and
+            # any join the caller built into the batch) each run as a
+            # job of their own: 4 on a content-deduped trickle batch,
+            # 5 when it is salted.
             touched = None
-            rows_in = None
-            obs_in = Observation()
-            src = src.observe(obs_in,
-                              F.count(F.lit(1)).alias("rows_in"))
         else:
-            # touched buckets + rows_in from ONE aggregation over the
-            # batch KEYS, not from materialized winners: LWW preserves
-            # the key set, so the bucket sets are identical — and this
-            # query column-prunes the batch down to the key (the rule
+            # touched buckets from ONE aggregation over the batch KEYS,
+            # not from materialized winners: LWW preserves the key set,
+            # so the bucket sets are identical — and this query
+            # column-prunes the batch down to the key (the rule
             # projection's other columns, including the Arrow json UDF,
             # are pruned away). The winners pipeline is then consumed by
-            # exactly ONE job (the bucket write), so nothing is
+            # exactly ONE query (the bucket write), so nothing is
             # persisted/read back through the block store — on a
             # bandwidth-bound host that double materialization was the
             # single largest per-batch memory cost.
-            bucket_counts = (src.groupBy(bucket_expr.alias("bucket"))
-                             .count().collect())
-            touched = sorted(r["bucket"] for r in bucket_counts)
-            rows_in = sum(r["count"] for r in bucket_counts)
+            touched = sorted(
+                r["bucket"] for r in
+                src.select(bucket_expr.alias("bucket")).distinct()
+                .collect())
 
+        # the LWW aggregate counts each key's events on the way: their
+        # sum is rows_in and their max the hot-key figure, observed on
+        # the write job rather than computed by a job of their own
         if n_salts:
             winners = salted_last_writer_wins(
-                src, key=key, order=order, n_salts=n_salts)
+                src, key=key, order=order, n_salts=n_salts,
+                count_col=_KEY_EVENTS)
         else:
-            winners = last_writer_wins(src, key=key, order=order)
+            winners = last_writer_wins(src, key=key, order=order,
+                                       count_col=_KEY_EVENTS)
         winners = winners.withColumn("bucket", bucket_expr)
 
         if mode == "delta":
@@ -516,23 +533,32 @@ class LakeTable:
         else:
             # a delta-carrying bucket needs no pre-resolve here: the
             # combined LWW below collapses base, deltas, and the batch
-            # in one aggregate (and the rewrite folds the deltas away)
+            # in one aggregate (and the rewrite folds the deltas away).
+            # Existing rows carry no count, so the summed count stays
+            # the batch's own
             existing = self._read_files(self._file_groups(m, touched), m)
             if existing is not None:
                 existing = existing.withColumn("bucket", bucket_expr)
                 combined = last_writer_wins(
                     existing.unionByName(winners,
                                          allowMissingColumns=True),
-                    key=key, order=order)
+                    key=key, order=order, count_col=_KEY_EVENTS)
             else:
                 combined = winners
 
-        obs2 = Observation()
+        # every figure rides ONE Observation at the top of the written
+        # plan: one nested under the cow union goes unreported inside a
+        # streaming foreachBatch, and Observation.get then blocks for
+        # ever
+        obs = Observation()
         combined = combined.observe(
-            obs2,
+            obs,
             F.count(F.lit(1)).alias("winners"),
             F.sum(F.when(F.col(OP_COL) == "D", 1).otherwise(0))
-             .alias("tombstones"))
+             .alias("tombstones"),
+            F.sum(_KEY_EVENTS).alias("rows_in"),
+            F.max(_KEY_EVENTS).alias("top_key_events")) \
+            .drop(_KEY_EVENTS)
 
         new_snap = m["snapshot_id"] + 1
         rel_dir = "data/s%08d" % new_snap
@@ -553,7 +579,6 @@ class LakeTable:
         if touched is None:
             # delta mode: the written directories ARE the touched set
             touched = sorted(written)
-            rows_in = int(obs_in.get["rows_in"] or 0)
         else:
             # reconcile what was actually written against the `touched`
             # set computed from the separate key-scan job: a
@@ -593,13 +618,15 @@ class LakeTable:
         self._write_manifest(m2)
         self._commit_head(new_snap, expected_parent=m["snapshot_id"])
 
-        stats2 = obs2.get
+        stats = obs.get
+        top = stats.get("top_key_events")
         return MergeResult(
             batch_id, new_snap, skipped=False,
-            rows_in=int(rows_in),
-            winners=int(stats2.get("winners") or 0),
-            tombstones=int(stats2.get("tombstones") or 0),
-            buckets_touched=len(touched))
+            rows_in=int(stats.get("rows_in") or 0),
+            winners=int(stats.get("winners") or 0),
+            tombstones=int(stats.get("tombstones") or 0),
+            buckets_touched=len(touched),
+            top_key_events=None if top is None else int(top))
 
     def rollback(self, snapshot_id: int) -> int:
         """Roll the table back to a retained snapshot (the Iceberg

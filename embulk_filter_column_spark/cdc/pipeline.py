@@ -25,6 +25,7 @@ from ..config import FilterConfig
 from ..errors import EngineError
 from ..plans.compiler import compile_filter
 from ..plans.evolution import plan_evolution
+from . import dedup
 from .checkpoint import Checkpoint
 from .lake import LakeTable
 from .metrics import BatchJournal
@@ -130,20 +131,28 @@ class CDCPipeline:
         self.compact_after_deltas = compact_after_deltas
         # hot-key skew defense: fan the in-batch LWW out over this many
         # salts (cdc.dedup.salted_last_writer_wins); None = single-stage;
-        # "auto" = per-batch sampled-frequency trigger (SURVEY §4): a
-        # cheap column-pruned sample of the batch's keys decides whether
-        # any key exceeds hot_key_share of the batch — only then does the
-        # two-stage salted LWW engage (auto_salt_n salts). The trigger
-        # costs one tiny sampled aggregation per batch over the key
-        # column alone (the WAL scan prunes to one column; the rule
-        # projection is NOT evaluated for it).
+        # "auto" = the two-stage salted LWW (auto_salt_n salts) engages
+        # for batch n when the previous merge's busiest key held at
+        # least hot_key_share of its rows (MergeResult.top_key_events /
+        # rows_in, observed on the merge's own write job — no job of
+        # its own). Salting changes only the physical plan, never the
+        # result, so deciding one batch late is safe. With no previous
+        # merge to go by (this object's first batch, after a skipped or
+        # empty one, or a sink that reports no top_key_events) a
+        # column-pruned sample of the batch's keys decides instead
+        # (cdc.dedup.hot_keys, hot_key_fraction of the events; 3-4
+        # Spark jobs).
         self.auto_salt = n_salts == "auto"
         self.n_salts = None if self.auto_salt else n_salts
         self.auto_salt_n = auto_salt_n
         self.hot_key_fraction = hot_key_fraction
         self.hot_key_share = hot_key_share
+        # the previous merge's top_key_events / rows_in; None = unknown
+        self._top_key_share: float | None = None
         # (batch_id, engaged, n_hot) per processed batch — lets operators
-        # and tests see when the skew path kicked in
+        # and tests see when the skew path kicked in. n_hot counts the
+        # sampled hot keys on a probed batch; on a batch decided by the
+        # previous merge's share it is 1 when engaged (the busiest key)
         self.salt_log: list = []
         self.dedup_index = dedup_index
         self.dedup_text_col = dedup_text_col
@@ -169,6 +178,15 @@ class CDCPipeline:
             if chunk >= start:
                 active = cfg
         return active
+
+    def _n_hot_keys(self, events) -> int:
+        """How many keys to salt this batch for: the previous merge's
+        busiest-key share when there is one, else a sampled probe."""
+        if self._top_key_share is not None:
+            return int(self._top_key_share >= self.hot_key_share)
+        return len(dedup.hot_keys(events.select(self.key), key=self.key,
+                                  fraction=self.hot_key_fraction,
+                                  min_share=self.hot_key_share))
 
     def _project(self, df, config: FilterConfig):
         # compile once per (config, input schema): the rule tree is
@@ -234,9 +252,11 @@ class CDCPipeline:
             raise ValueError(
                 "no dead-letter queue configured — pass dlq_path= to "
                 "the pipeline to enable quarantine")
+        # the directory itself, partition-discovered: a "/batch=*" glob
+        # is probed as a metadata directory, which logs a
+        # FileNotFoundException on every call
         return (self.spark.read.option("mergeSchema", "true")
-                .option("basePath", self.dlq_path)
-                .parquet(self.dlq_path + "/batch=*"))
+                .parquet(self.dlq_path))
 
     def _content_dedup(self, projected, batch_id: int):
         """Suppress upserts whose ``dedup_text_col`` content the index
@@ -333,13 +353,9 @@ class CDCPipeline:
             events = self.reader.read_chunks(lo, hi)
             use_salts = self.n_salts
             if self.auto_salt:
-                from .dedup import hot_keys
-
-                hot = hot_keys(events.select(self.key), key=self.key,
-                               fraction=self.hot_key_fraction,
-                               min_share=self.hot_key_share)
-                use_salts = self.auto_salt_n if hot else None
-                self.salt_log.append((batch_id, bool(hot), len(hot)))
+                n_hot = self._n_hot_keys(events)
+                use_salts = self.auto_salt_n if n_hot else None
+                self.salt_log.append((batch_id, bool(n_hot), n_hot))
             projected, out_schema = self._project(events, config)
             if self.dlq_path is not None:
                 projected = self._quarantine(projected, batch_id)
@@ -352,6 +368,10 @@ class CDCPipeline:
                 # (IcebergSink MERGE INTO) need not grow a mode knob
                 merge_kwargs["mode"] = self.merge_mode
             result = lake.merge(projected, batch_id, **merge_kwargs)
+            top = getattr(result, "top_key_events", None)
+            rows_in = getattr(result, "rows_in", 0)
+            self._top_key_share = (top / rows_in if top is not None
+                                   and rows_in else None)
             if (self.compact_after_deltas and not result.skipped
                     and hasattr(lake, "compact")):
                 m = lake.head()

@@ -219,18 +219,28 @@ class IcebergSink:
 
     def merge(self, batch: DataFrame, batch_id: int,
               op_col: str = "op", n_salts: int | None = None):
+        from pyspark.sql import Observation, functions as F
+
         from .dedup import last_writer_wins, salted_last_writer_wins
-        from .lake import MergeResult
+        from .lake import _KEY_EVENTS, MergeResult
 
         if batch_id <= self.committed_batch_id:
             return MergeResult(batch_id, -1, skipped=True)
         if n_salts:
             winners = salted_last_writer_wins(
-                batch, key=self.key, order=self.order, n_salts=n_salts)
+                batch, key=self.key, order=self.order, n_salts=n_salts,
+                count_col=_KEY_EVENTS)
         else:
             winners = last_writer_wins(batch, key=self.key,
-                                       order=self.order)
-        winners = winners.withColumnRenamed(op_col, "_op")
+                                       order=self.order,
+                                       count_col=_KEY_EVENTS)
+        # same per-key counts as LakeTable.merge, observed on the MERGE
+        obs = Observation()
+        winners = (winners
+                   .observe(obs, F.sum(_KEY_EVENTS).alias("rows_in"),
+                            F.max(_KEY_EVENTS).alias("top_key_events"))
+                   .drop(_KEY_EVENTS)
+                   .withColumnRenamed(op_col, "_op"))
         view = f"_cdc_batch_{batch_id}"
         winners.createOrReplaceTempView(view)
         columns = [c for c in winners.columns if c != "_op"]
@@ -238,7 +248,15 @@ class IcebergSink:
                                  columns))
         self.spark.sql(set_batch_id_sql(self.table, batch_id))
         self.spark.catalog.dropTempView(view)
-        return MergeResult(batch_id, -1, skipped=False)
+        # read without blocking: a MERGE INTO command need not report
+        # the observations of its source, and Observation.get would
+        # then wait for ever. Without the figures the pipeline's
+        # auto-salting probes every batch
+        stats = {} if obs._jo.getRowOrEmpty().isEmpty() else obs.get
+        top = stats.get("top_key_events")
+        return MergeResult(batch_id, -1, skipped=False,
+                           rows_in=int(stats.get("rows_in") or 0),
+                           top_key_events=None if top is None else int(top))
 
     def evolve(self, new_schema: T.StructType,
                renames: dict | None = None) -> int:

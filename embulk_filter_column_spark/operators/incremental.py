@@ -47,8 +47,9 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..fsio import io_for
 from ..functions.text import doc_fingerprint
@@ -154,6 +155,11 @@ class _JournaledIndex:
 
 
 class FingerprintIndex(_JournaledIndex):
+    # the index columns a probe reads (the id column is never read back)
+    _INDEX_SCHEMA = T.StructType([
+        T.StructField("fingerprint", T.LongType()),
+        T.StructField("bucket", T.IntegerType())])
+
     def _bucket(self, col) -> F.Column:
         return F.pmod(col, F.lit(self.num_buckets)).cast("int")
 
@@ -193,23 +199,26 @@ class FingerprintIndex(_JournaledIndex):
 
         fp = doc_fingerprint(text_col).alias("fingerprint")
         # ONE heavy pass over the batch (fingerprint scan + in-batch
-        # min-id groupBy), materialized eagerly: the bucket probe, the
-        # index anti-join, the journal write and the index append all
-        # reuse the checkpointed (fingerprint, id) rows — the probe
-        # job used to re-run the whole batch scan a second time just
-        # to list its buckets (guide §1.2: remove repeated passes
-        # before tuning anything else)
+        # min-id groupBy), materialized eagerly: the index anti-join,
+        # the journal write and the index append all reuse the
+        # checkpointed (fingerprint, id) rows, and the bucket probe
+        # rides the same job as an Observation (at most num_buckets
+        # values) instead of a distinct/collect pass of its own
+        # (guide §1.2: remove repeated passes before tuning anything)
+        probe = Observation()
         firsts = (df.select(F.col(id_col), fp)
                   .groupBy("fingerprint")
                   .agg(F.min(id_col).alias(id_col))
+                  .observe(probe, F.collect_set(
+                      self._bucket(F.col("fingerprint"))).alias("b"))
                   .localCheckpoint(eager=True))
         if self._exists():
-            buckets = [r["bucket"] for r in
-                       firsts.select(self._bucket(F.col("fingerprint"))
-                                     .alias("bucket"))
-                       .distinct().collect()]
-            seen = (self.spark.read.parquet(self.path)
-                    .where(F.col("bucket").isin(buckets))
+            # explicit schemas on every read-back: parquet schema
+            # inference is a Spark job per read. Only the fingerprint is
+            # read from the index, whatever id column it was built with
+            seen = (self.spark.read.schema(self._INDEX_SCHEMA)
+                    .parquet(self.path)
+                    .where(F.col("bucket").isin(probe.get["b"]))
                     .select("fingerprint"))
             # the anti-join decision must be pinned before the index
             # mutates (a lazy plan re-evaluated after the append would
@@ -227,7 +236,8 @@ class FingerprintIndex(_JournaledIndex):
             # of the same rows)
             (fresh.write.mode("overwrite")
              .parquet(self._journal_dir(batch_id)))
-            fresh = self.spark.read.parquet(self._journal_dir(batch_id))
+            fresh = (self.spark.read.schema(firsts.schema)
+                     .parquet(self._journal_dir(batch_id)))
         elif fresh is not firsts:
             fresh = fresh.localCheckpoint(eager=True)
         self._append_to_index(fresh)

@@ -548,6 +548,127 @@ def test_auto_salting_stays_off_on_uniform_keys(spark, tmp_path):
         pipe.salt_log
 
 
+def test_hot_keys_needs_a_measurable_sample(spark):
+    """1 % of 1,500 near-uniform events is ~15 sampled rows; 5 % of that
+    is under one event, so without a floor every sampled key would count
+    as hot. A sample too small to measure min_share reports none."""
+    from pyspark.sql import functions as F
+
+    from embulk_filter_column_spark.cdc.dedup import hot_keys
+
+    events = spark.range(1500).select(
+        F.concat(F.lit("https://u"), F.pmod(F.col("id"), F.lit(700)),
+                 F.lit(".example.com/")).alias("url"))
+    assert hot_keys(events, fraction=0.01, min_share=0.05) == []
+
+
+def _viral_then_uniform_events(spark, n_chunks, chunk_rows):
+    """Chunk 0: 60 % of events on one viral url; later chunks: uniform
+    over 500 urls."""
+    from pyspark.sql import functions as F
+
+    in_first = F.col("id") < chunk_rows
+    return spark.range(n_chunks * chunk_rows).select(
+        F.lit("I").alias("op"),
+        F.col("id").alias("seq"),
+        F.when(in_first & (F.col("id") % 10 < 6),
+               "https://viral.example.com/")
+         .otherwise(F.concat(F.lit("https://u"),
+                             F.pmod(F.col("id"), F.lit(500)),
+                             F.lit(".example.com/"))).alias("url"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id"))
+         .alias("warc_ts"),
+        F.sha2(F.col("id").cast("string"), 256).alias("text"))
+
+
+def test_auto_salting_lags_one_batch(spark, tmp_path):
+    """n_salts="auto" decides batch n from batch n-1's merge: the first
+    batch is probed (viral key: salted), the second follows the first
+    merge's observed busiest-key share (salted), the third follows the
+    uniform second batch (not salted). The state matches the oracle,
+    and the observed figures do not depend on salting."""
+    events = _viral_then_uniform_events(spark, 3, 1000)
+    wal_dir = str(tmp_path / "wal")
+    write_wal(events, wal_dir, chunk_rows=1000)
+
+    pipe = CDCPipeline(
+        spark, wal_dir, str(tmp_path / "lake"), str(tmp_path / "cp"),
+        num_buckets=8, n_salts="auto", hot_key_fraction=0.5)
+    results = pipe.run()
+    assert pipe.salt_log == [(1, True, 1), (2, True, 1), (3, False, 0)]
+    assert [(r.rows_in, r.top_key_events) for r in results] == \
+        [(1000, 600), (1000, 2), (1000, 2)]
+    want = oracle_state(spark, wal_dir)
+    assert final_pairs(pipe.table().read()) == \
+        sorted(zip(want["url"], want["text"]))
+
+    first = spark.read.parquet(wal_dir).where("chunk = 0").drop("chunk")
+    for mode in ("cow", "delta"):
+        observed = set()
+        for n_salts in (None, 4):
+            lake = LakeTable.create(
+                spark, str(tmp_path / ("%s-%s" % (mode, n_salts))),
+                first.drop("op").schema, num_buckets=8)
+            r = lake.merge(first, 1, n_salts=n_salts, mode=mode)
+            observed.add((r.rows_in, r.winners, r.top_key_events))
+        assert observed == {(1000, 201, 600)}, (mode, observed)
+
+
+def _batch_jobs(spark, group, fn):
+    """Spark jobs ``fn`` runs, counted through its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_trickle_batch_job_floor(spark, tmp_path):
+    """The per-batch Spark-job floor of a trickle pipeline (delta
+    merges, FingerprintIndex content dedup, DLQ, auto-salting): no job
+    may exist only to produce a number. A steady-state batch runs at
+    most 14 jobs, and a probing FingerprintIndex.dedup_ids call (the
+    index already holds data) at most 7."""
+    from pyspark.sql import functions as F
+
+    from embulk_filter_column_spark.operators.incremental import (
+        FingerprintIndex,
+    )
+
+    events = spark.range(4 * 300).select(
+        F.when(F.col("id") % 50 == 7, "X").otherwise("I").alias("op"),
+        F.col("id").alias("seq"),
+        F.concat(F.lit("https://u"), F.pmod(F.col("id"), F.lit(400)),
+                 F.lit(".example.com/")).alias("url"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id"))
+         .alias("warc_ts"),
+        F.concat(F.lit("page "), F.pmod(F.col("id"), F.lit(900))
+                 .cast("string")).alias("text"))
+    wal_dir = str(tmp_path / "wal")
+    write_wal(events, wal_dir, chunk_rows=300)
+    pipe = CDCPipeline(
+        spark, wal_dir, str(tmp_path / "lake"), str(tmp_path / "cp"),
+        num_buckets=8, merge_mode="delta", n_salts="auto",
+        dedup_index=FingerprintIndex(spark, str(tmp_path / "idx"),
+                                     num_buckets=8),
+        dlq_path=str(tmp_path / "dlq"))
+    pipe.run(max_batches=2)
+    jobs = _batch_jobs(spark, "cdc-floor-batch",
+                       lambda: pipe.run(max_batches=1))
+    assert jobs <= 14, jobs
+    assert [engaged for _, engaged, _ in pipe.salt_log] == [False] * 3
+
+    idx = FingerprintIndex(spark, str(tmp_path / "idx2"), num_buckets=8)
+    docs = events.select(F.col("seq").alias("doc_id"), "text")
+    idx.dedup_ids(docs.where("seq < 600"), batch_id="b1")
+    jobs = _batch_jobs(
+        spark, "cdc-floor-dedup",
+        lambda: idx.dedup_ids(docs.where("seq >= 600"), batch_id="b2"))
+    assert jobs <= 7, jobs
+
+
 def _data_bytes(lake_dir, snapshot_prefix=None):
     total = 0
     root = os.path.join(lake_dir, "data")
