@@ -84,23 +84,12 @@ def _ensure_shipped(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
         return
-    import os
-    import zipfile
+    from tools.make_pyfiles_zip import build
 
-    import embulk_filter_column_spark as pkg
-
-    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
     zpath = os.path.join(
         tempfile.gettempdir(), f"efcs_pyfiles_{os.getpid()}.zip")
     if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for dirpath, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(dirpath, f)
-                        rel = os.path.relpath(
-                            full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
+        build(zpath)
     spark.sparkContext.addPyFile(zpath)
     _SHIPPED_APPS.add(app_id)
 

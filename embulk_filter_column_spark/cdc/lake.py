@@ -114,7 +114,7 @@ class LakeTable:
     def _write_manifest(self, manifest: dict) -> None:
         p = self._io.join(self.meta_dir,
                           "snapshot-%08d.json" % manifest["snapshot_id"])
-        self._io.write_text_atomic(p, json.dumps(manifest))
+        self._io.write_atomic(p, json.dumps(manifest).encode())
 
     def _commit_head(self, snapshot_id: int,
                      expected_parent: int | None = None) -> None:
@@ -135,8 +135,8 @@ class LakeTable:
                         "snapshot %d while this commit was derived from "
                         "%d — retry from the new table state"
                         % (current, expected_parent))
-        self._io.write_text_atomic(self._io.join(self.meta_dir, "HEAD"),
-                                   str(snapshot_id))
+        self._io.write_atomic(self._io.join(self.meta_dir, "HEAD"),
+                              str(snapshot_id).encode())
 
     def head(self) -> dict:
         snap = int(self._io.read_text(

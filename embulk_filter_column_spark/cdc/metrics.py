@@ -1,6 +1,7 @@
 """Per-batch lineage + metrics tables (SURVEY.md §7 step 7).
 
-Appended as small parquet files next to the lake table:
+One small parquet file per batch in each of two directories next to the
+lake table:
 
 * ``_lineage``  — batch id → WAL offset range → lake snapshot id
 * ``_metrics``  — per-batch row counts (from ``Observation``s collected
@@ -12,13 +13,12 @@ the driver: a one-row metadata append must not cost a Spark job
 (measured 4-13 s per batch for two ``createDataFrame(...).coalesce(1)``
 writes — the Python-worker round trips scale with defaultParallelism
 and were the single largest per-batch overhead in the replay loop).
+Each file is serialized in memory and committed with
+``fsio.io_for(...).write_atomic``, so the journal lands on whatever
+filesystem the lake path names.
 """
 
 from __future__ import annotations
-
-import os
-import re
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -26,10 +26,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-# URI scheme prefix (hdfs://, s3a://, file://, ...) — anything that is not
-# a plain local path must go through the Hadoop FileSystem API, not
-# os.makedirs/os.replace on the driver's local disk
-_SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
+from ..fsio import io_for
 
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("batch_id", T.LongType()),
@@ -61,74 +58,38 @@ _METRICS_PA = pa.schema([
 ])
 
 
-def _append_row_local(path: str, schema: pa.Schema, row: dict) -> None:
-    """Atomic single-row parquet append: write temp file, rename in."""
-    os.makedirs(path, exist_ok=True)
-    table = pa.Table.from_pylist([row], schema=schema)
-    name = "part-%08d-%s.parquet" % (row["batch_id"], uuid.uuid4().hex[:8])
-    tmp = os.path.join(path, "." + name + ".tmp")
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(path, name))
-
-
-def _append_row_hadoop(spark: SparkSession, path: str, schema: pa.Schema,
-                       row: dict) -> None:
-    """Same append through the Hadoop FileSystem API (hdfs://, s3a://,
-    ...): write the 1-row parquet locally with pyarrow (milliseconds),
-    then moveFromLocalFile into the target FS — still no Spark job, and
-    the rows land where ``lineage()``/``metrics()`` actually read
-    (spark.read.parquet resolves the same Hadoop FS)."""
-    import tempfile
-
-    jvm = spark._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    dst_dir = jvm.org.apache.hadoop.fs.Path(path)
-    fs = dst_dir.getFileSystem(conf)
-    fs.mkdirs(dst_dir)
-    name = "part-%08d-%s.parquet" % (row["batch_id"], uuid.uuid4().hex[:8])
-    local = os.path.join(tempfile.gettempdir(),
-                         ".journal-%s-%s" % (uuid.uuid4().hex[:8], name))
-    pq.write_table(pa.Table.from_pylist([row], schema=schema), local)
-    fs.moveFromLocalFile(
-        jvm.org.apache.hadoop.fs.Path("file://" + local),
-        jvm.org.apache.hadoop.fs.Path(path + "/" + name))
-
-
 class BatchJournal:
     def __init__(self, spark: SparkSession, lake_path: str):
         self.spark = spark
-        self._remote = bool(_SCHEME_RE.match(lake_path)) \
-            and not lake_path.startswith("file:")
-        if lake_path.startswith("file:"):
-            # file: is local — strip the scheme (file:///p, file://p and
-            # file:/p all resolve to /p; file://host/p is not supported)
-            # so os-level writes land where spark.read.parquet reads
-            lake_path = "/" + lake_path[len("file:"):].lstrip("/")
-        if self._remote:
-            self.lineage_path = lake_path.rstrip("/") + "/_lineage"
-            self.metrics_path = lake_path.rstrip("/") + "/_metrics"
-        else:
-            self.lineage_path = os.path.join(lake_path, "_lineage")
-            self.metrics_path = os.path.join(lake_path, "_metrics")
+        self._io = io_for(spark, lake_path)
+        self.lineage_path = self._io.join(lake_path, "_lineage")
+        self.metrics_path = self._io.join(lake_path, "_metrics")
 
-    def _append(self, path: str, schema: pa.Schema, row: dict) -> None:
-        if self._remote:
-            _append_row_hadoop(self.spark, path, schema, row)
-        else:
-            _append_row_local(path, schema, row)
+    def _put(self, path: str, schema: pa.Schema, row: dict,
+             overwrite: bool) -> None:
+        f = self._io.join(path, "part-%08d.parquet" % row["batch_id"])
+        if not overwrite and self._io.exists(f):
+            return
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist([row], schema=schema), buf)
+        self._io.write_atomic(f, buf.getvalue().to_pybytes())
 
     def record(self, result, chunk_lo: int, chunk_hi: int,
                wall_sec: float) -> None:
-        self._append(self.lineage_path, _LINEAGE_PA, {
+        """One row per batch in each table, named by batch id. An
+        applied merge (over)writes its rows, so a replay after a
+        rollback shows the new snapshot; a skipped merge (the crash
+        replay of a committed batch) keeps the rows already there."""
+        overwrite = not result.skipped
+        self._put(self.lineage_path, _LINEAGE_PA, {
             "batch_id": result.batch_id, "chunk_lo": chunk_lo,
             "chunk_hi": chunk_hi, "snapshot_id": result.snapshot_id,
-            "skipped": result.skipped})
-        self._append(self.metrics_path, _METRICS_PA, {
+            "skipped": result.skipped}, overwrite)
+        self._put(self.metrics_path, _METRICS_PA, {
             "batch_id": result.batch_id, "rows_in": result.rows_in,
             "winners": result.winners, "tombstones": result.tombstones,
             "buckets_touched": result.buckets_touched,
-            "wall_sec": float(wall_sec)})
+            "wall_sec": float(wall_sec)}, overwrite)
 
     def lineage(self):
         return self.spark.read.parquet(self.lineage_path)

@@ -114,7 +114,7 @@ class CDCPipeline:
         self.reader = WalReader(spark, wal_path)
         self.lake_path = lake_path
         self.sink = sink
-        self.checkpoint = Checkpoint.load(checkpoint_path)
+        self.checkpoint = Checkpoint.load(spark, checkpoint_path)
         self.key = key
         self.order = tuple(order)
         self.num_buckets = num_buckets

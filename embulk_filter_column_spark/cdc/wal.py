@@ -2,33 +2,31 @@
 
 A WAL is a directory of ``chunk=<n>/`` parquet partitions (written by
 ``sources.write_wal``); the chunk number is the replay offset unit — the
-engine analog of a binlog file/position. Reading a chunk range goes through
-partition-column pruning (``WHERE chunk BETWEEN lo AND hi-1`` prunes
-directories at plan time — no full-scan at 10^10 events).
+engine analog of a binlog file/position. The chunk listing and the
+chunk-directory probe go through ``fsio.io_for``, so a WAL on any
+scheme the Spark session resolves is tailed the same way.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
+from ..fsio import io_for
 
 
 class WalReader:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._io = io_for(spark, path)
 
     def chunk_ids(self) -> list:
-        """Available chunk offsets, sorted. Local-FS listing; a cluster
-        deployment swaps this for the Hadoop FileSystem API — the rest of
-        the reader is storage-agnostic."""
+        """Available chunk offsets, sorted."""
         out = []
-        for name in os.listdir(self.path):
+        for name in self._io.listnames(self.path):
             m = re.fullmatch(r"chunk=(\d+)", name)
             if m:
                 out.append(int(m.group(1)))
@@ -48,27 +46,15 @@ class WalReader:
         O(all chunks) per batch even though partition pruning skips the
         *reads* — at 10^5 chunks that listing is a per-batch driver
         metadata bottleneck. Scoped paths keep planning O(chunks in
-        batch).
-
-        The chunk-directory probe is local-FS (like chunk_ids); a
-        non-local WAL (hdfs://, s3a://) falls back to the whole-root
-        read with a partition-range filter — still correct (directory
-        pruning skips the data reads), just O(all chunks) listing."""
-        if _SCHEME_RE.match(self.path) and not self.path.startswith("file:"):
-            df = self.spark.read.parquet(self.path)
-            return (df.where((F.col("chunk") >= lo) & (F.col("chunk") < hi))
-                      .drop("chunk"))
-        dirs = [
-            os.path.join(self.path, "chunk=%d" % c)
-            for c in range(lo, hi)
-            if os.path.isdir(os.path.join(self.path, "chunk=%d" % c))
-        ]
+        batch)."""
+        dirs = [d for d in (self._io.join(self.path, "chunk=%d" % c)
+                            for c in range(lo, hi))
+                if self._io.isdir(d)]
         if not dirs:
             # empty range: preserve the schema via a zero-row slice
             return (self.spark.read.parquet(self.path)
                     .where(F.lit(False)).drop("chunk"))
-        df = (self.spark.read
-              .option("basePath", self.path)
-              .parquet(*dirs))
-        return (df.where((F.col("chunk") >= lo) & (F.col("chunk") < hi))
-                  .drop("chunk"))
+        return (self.spark.read
+                .option("basePath", self.path)
+                .parquet(*dirs)
+                .drop("chunk"))

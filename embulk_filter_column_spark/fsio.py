@@ -1,31 +1,36 @@
-"""Filesystem seam for table/index METADATA IO (VERDICT r4 item 2).
+"""Filesystem seam: the one place that maps a path to a filesystem.
 
-The native lake (``cdc/lake.py``) and the persistent dedup indexes
-(``operators/incremental.py``) commit through tiny metadata files —
-manifests, HEAD pointers, journal markers. Data files always go through
-Spark (scheme-agnostic already); the metadata used to go through
-``open()``/``os.replace``/``glob`` on the driver's local disk, which
-silently pinned the whole durability story to the local filesystem: a
-100 TB deployment pointing its lake at ``hdfs://`` or ``s3a://`` had no
-metadata there at all.
+Every driver-side file the CDC engine and the persistent indexes read
+or commit goes through ``io_for(spark, path)``: the lake's manifests and
+HEAD pointer (``cdc/lake.py``), the dedup indexes' params and journal
+markers (``operators/incremental.py``), the offset checkpoint
+(``cdc/checkpoint.py``), the WAL chunk listing (``cdc/wal.py``,
+``sources.write_wal``) and the lineage/metrics journal rows
+(``cdc/metrics.py``). Data files always go through Spark, which resolves
+the same filesystem for the same path, so metadata and data land on one
+store and exactly-once resume holds on every scheme.
 
-``io_for(spark, path)`` picks the implementation by path shape:
+``io_for`` picks the implementation by path shape:
 
 * plain local paths keep the ``os``-level fast path (no JVM chatter on
   the per-batch commit hot loop);
 * any ``scheme:/...`` path routes through the Hadoop FileSystem API of
-  the Spark session's Hadoop configuration — the same filesystem
-  ``spark.read.parquet`` resolves, so metadata and data always land on
-  the same store. The atomic-rename commit contract is kept with
-  ``FileContext.rename(..., Options.Rename.OVERWRITE)`` — atomic on
-  HDFS; on eventually-atomic stores (S3A) it degrades exactly like any
-  Hadoop-committer rename, which is the documented trade of running a
-  rename-committed format there.
+  the Spark session's Hadoop configuration. The atomic-rename commit
+  contract is kept with ``FileContext.rename(..., Options.Rename.
+  OVERWRITE)`` — atomic on HDFS; on eventually-atomic stores (S3A) it
+  degrades exactly like any Hadoop-committer rename, which is the
+  documented trade of running a rename-committed format there.
 
 ``file:/...`` deliberately routes through the HADOOP branch: it is the
 one scheme testable without a cluster, so the remote code path is
-exercised end-to-end by ordinary pytest (see test_cdc / test_operators
-``file://`` cases).
+exercised end-to-end by ordinary pytest (the ``file://`` cases in
+test_cdc / test_operators).
+
+``write_atomic(path, data)`` is the single commit primitive: the bytes
+go to ``<dir>/.<name>.tmp`` on the same filesystem, are flushed, and the
+temp file is renamed over ``path``. The leading dot keeps a crash
+leftover out of ``spark.read.parquet`` and pyarrow dataset listings,
+which skip hidden files.
 """
 
 from __future__ import annotations
@@ -82,12 +87,13 @@ class LocalIO:
             return fh.read()
 
     @staticmethod
-    def write_text_atomic(path: str, text: str) -> None:
-        """tmp + fsync + atomic rename — the commit primitive."""
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(text)
+    def write_atomic(path: str, data: bytes) -> None:
+        """hidden tmp + fsync + atomic rename — the commit primitive."""
+        parent, name = os.path.split(path)
+        os.makedirs(parent, exist_ok=True)
+        tmp = os.path.join(parent, "." + name + ".tmp")
+        with open(tmp, "wb") as fh:
+            fh.write(data)
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, path)
@@ -231,14 +237,15 @@ class HadoopIO:
         finally:
             stream.close()
 
-    def write_text_atomic(self, path: str, text: str) -> None:
-        """tmp file on the SAME filesystem + FileContext atomic
+    def write_atomic(self, path: str, data: bytes) -> None:
+        """hidden tmp file on the SAME filesystem + FileContext atomic
         rename-overwrite — the commit primitive (write-audit-publish:
         content is fully written and closed before the name moves)."""
-        tmp = self._Path(path + ".tmp")
+        parent, name = path.rstrip("/").rsplit("/", 1)
+        tmp = self._Path(parent + "/." + name + ".tmp")
         out = self._fs.create(tmp, True)
         try:
-            out.write(bytearray(text.encode("utf-8")))
+            out.write(bytearray(data))
             out.hflush()
         finally:
             out.close()

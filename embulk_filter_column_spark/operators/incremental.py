@@ -342,7 +342,7 @@ class MinHashIndex(_JournaledIndex):
                     % (self.path, stored, mine))
         else:
             self._io.mkdirs(self.path)
-            self._io.write_text_atomic(p, json.dumps(mine))
+            self._io.write_atomic(p, json.dumps(mine).encode())
 
     def _exists(self) -> bool:
         return bool(self._io.glob(

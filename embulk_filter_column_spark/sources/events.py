@@ -18,11 +18,10 @@ handling downstream.
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..cdc.wal import WalReader
 
 LANGS = ("en", "de", "fr", "ja", "es", "pt", "zh", "ru")
 
@@ -123,8 +122,4 @@ def write_wal(df: DataFrame, path: str, chunk_rows: int = 100_000) -> int:
         .write.mode("overwrite").partitionBy("chunk").parquet(path))
     # chunk count from the written partition directories — an O(dirs)
     # driver listing, not an extra full-scan max() job over the WAL
-    chunks = glob.glob(os.path.join(path, "chunk=*"))
-    if not chunks:
-        return 0
-    return max(int(os.path.basename(c).split("=", 1)[1])
-               for c in chunks) + 1
+    return WalReader(df.sparkSession, path).end_offset

@@ -70,6 +70,10 @@ def test_rerun_is_idempotent(spark, wal, tmp_path):
     assert len(replayed) == 4 and all(r.skipped for r in replayed)
     assert pipe.table().head()["snapshot_id"] == snap_before
     assert final_pairs(pipe.table().read()) == state_before
+    # the skipped replay keeps one journal row per batch, with the
+    # counts of the merges that applied
+    assert pipe.journal.lineage().count() == 4
+    assert pipe.journal.metrics().toPandas()["rows_in"].sum() == N_EVENTS
 
 
 def test_kill_and_resume(spark, wal, tmp_path):
@@ -83,6 +87,44 @@ def test_kill_and_resume(spark, wal, tmp_path):
     want = oracle_state(spark, wal)
     assert final_pairs(resumed.table().read()) == \
         sorted(zip(want["url"], want["text"]))
+
+
+def test_kill_and_resume_on_file_uris(spark, tmp_path, monkeypatch):
+    """Exactly-once resume with every path a ``file://`` URI: the WAL
+    listing, checkpoint, journal, DLQ and dedup index all take the
+    Hadoop branch of ``fsio`` and land where the URI names — nothing
+    under the driver's cwd."""
+    from embulk_filter_column_spark.operators.incremental import (
+        FingerprintIndex,
+    )
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+
+    def uri(name):
+        return "file://" + str(tmp_path / name)
+
+    events = web_change_events(spark, N_EVENTS, n_domains=20,
+                               pages_per_domain=10, seed=42)
+    assert write_wal(events, uri("wal"), chunk_rows=CHUNK_ROWS) == 4
+
+    def pipeline():
+        return CDCPipeline(
+            spark, uri("wal"), uri("lake"), uri("cp"), num_buckets=8,
+            dlq_path=uri("dlq"),
+            dedup_index=FingerprintIndex(spark, uri("idx"), num_buckets=4))
+
+    assert len(pipeline().run(max_batches=2)) == 2
+    resumed = pipeline()
+    assert len(resumed.run()) == 2
+
+    want = oracle_state(spark, uri("wal"))
+    assert final_pairs(resumed.table().read()) == \
+        sorted(zip(want["url"], want["text"]))
+    assert os.path.isfile(tmp_path / "cp" / "checkpoint.json")
+    assert not os.path.exists(cwd / "file:")
+    assert resumed.journal.lineage().count() == 4
 
 
 def test_projection_inside_pipeline(spark, wal, tmp_path):
@@ -831,7 +873,7 @@ def test_rollback_and_replay(spark, wal, tmp_path):
     lake_dir, cp_dir = str(tmp_path / "lake"), str(tmp_path / "cp")
     pipe = CDCPipeline(spark, wal, lake_dir, cp_dir, num_buckets=8,
                        chunks_per_batch=1)
-    pipe.run()
+    first = pipe.run()
     lake = pipe.table()
     clean_state = final_pairs(lake.read())
     head = lake.head()
@@ -853,6 +895,12 @@ def test_rollback_and_replay(spark, wal, tmp_path):
                           chunks_per_batch=1).run()
     assert [r.skipped for r in results] == [True, True, False, False]
     assert final_pairs(lake.read()) == clean_state
+    # one journal row per batch: the skipped batches keep their first
+    # run's row, the re-applied ones name the replayed snapshots
+    lineage = sorted((r["batch_id"], r["snapshot_id"])
+                     for r in pipe.journal.lineage().collect())
+    assert lineage == [(r.batch_id, r.snapshot_id)
+                       for r in first[:2] + results[2:]]
 
 
 def test_lake_on_file_scheme_uri_end_to_end(spark, tmp_path):
