@@ -5,13 +5,17 @@ The sandbox ships no Iceberg runtime jar, so the table format is
 implemented directly on parquet + JSON manifests with the same contract
 (SURVEY.md §7 step 4 "HadoopMergeSink"):
 
-* ``data/s<snapshot>/bucket=<b>/*.parquet`` — immutable data files
+* ``data/s<snapshot>-<attempt>/bucket=<b>/*.parquet`` — immutable data
+  files; every commit attempt writes a fresh directory (``<attempt>`` is
+  a uuid4), so no writer ever writes over a committed snapshot's files
 * ``_meta/snapshot-<n>.json`` — manifest: schema versions, rename chain,
-  bucket → file list, committed batch id
+  bucket → file list, committed batch id, parent snapshot
 * ``_meta/HEAD`` — current snapshot pointer, committed by atomic rename
   (write-audit-publish: data + manifest are fully written and fsynced
-  before HEAD moves; a crash before the rename leaves the old snapshot
-  live and the orphaned files are overwritten on retry)
+  before HEAD moves). Every commit goes through ``LakeTable._commit``. A
+  crash before the rename, or a commit refused because another writer
+  moved HEAD first, leaves the old snapshot live; the attempt's orphaned
+  data files are reclaimed by ``expire_snapshots``
 
 Scale design
 ------------
@@ -30,6 +34,8 @@ commits, not ordering.
 from __future__ import annotations
 
 import json
+import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +49,11 @@ OP_COL = "_op"
 # per-key event count the merge's LWW aggregate carries up to its
 # Observation (dropped before anything is written)
 _KEY_EVENTS = "_key_events"
+
+
+def _bucket(key: str, n: int):
+    """The bucket transform: rows of one key always land in one bucket."""
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int")
 
 
 class MergeResult:
@@ -116,27 +127,62 @@ class LakeTable:
                           "snapshot-%08d.json" % manifest["snapshot_id"])
         self._io.write_atomic(p, json.dumps(manifest).encode())
 
+    def _check_head(self, expected_parent: int) -> None:
+        head_file = self._io.join(self.meta_dir, "HEAD")
+        if self._io.exists(head_file):
+            current = int(self._io.read_text(head_file).strip())
+            if current != expected_parent:
+                raise EngineError(
+                    "concurrent commit detected: HEAD moved to snapshot "
+                    "%d while this commit was derived from %d — retry "
+                    "from the new table state" % (current, expected_parent))
+
     def _commit_head(self, snapshot_id: int,
                      expected_parent: int | None = None) -> None:
         """Move HEAD. With ``expected_parent``, refuse when another
-        writer advanced HEAD since this commit's manifest was derived —
-        best-effort optimistic concurrency (the check-then-rename window
-        is not atomic on a plain filesystem; Iceberg closes it with a
-        catalog CAS — the IcebergSink path inherits that). The engine's
-        single-writer pipelines never trip this; it guards operator
-        error (two pipelines pointed at one lake)."""
+        writer advanced HEAD since this commit's manifest was derived.
+        ``_commit`` makes the same check before it writes its manifest,
+        so a writer working from a stale HEAD is refused before it can
+        overwrite the committed ``snapshot-<n>.json`` (its data files
+        already sit in a directory of their own), and the committed
+        snapshot stays intact. Best-effort optimistic concurrency: the
+        check-then-rename window is not atomic on a plain filesystem;
+        Iceberg closes it with a catalog CAS, which the IcebergSink path
+        inherits. The engine's single-writer pipelines never trip this;
+        it guards operator error (two pipelines pointed at one lake)."""
         if expected_parent is not None:
-            head_file = self._io.join(self.meta_dir, "HEAD")
-            if self._io.exists(head_file):
-                current = int(self._io.read_text(head_file).strip())
-                if current != expected_parent:
-                    raise EngineError(
-                        "concurrent commit detected: HEAD moved to "
-                        "snapshot %d while this commit was derived from "
-                        "%d — retry from the new table state"
-                        % (current, expected_parent))
+            self._check_head(expected_parent)
         self._io.write_atomic(self._io.join(self.meta_dir, "HEAD"),
                               str(snapshot_id).encode())
+
+    def _commit(self, m: dict, **changes) -> int:
+        """Commit the snapshot after ``m``, the manifest this commit was
+        derived from, with ``changes`` applied; returns its id. The one
+        commit path of the table: check HEAD, write the manifest (parent
+        link to ``m``), then move HEAD under the same check."""
+        snap = m["snapshot_id"] + 1
+        self._check_head(m["snapshot_id"])
+        self._write_manifest({**m, **changes, "snapshot_id": snap,
+                              "parent": m["snapshot_id"]})
+        self._commit_head(snap, expected_parent=m["snapshot_id"])
+        return snap
+
+    def _write_buckets(self, df: DataFrame, m: dict, n_parts: int) -> dict:
+        """Write ``df`` (with a ``bucket`` column) as the data files of
+        one commit attempt on top of ``m``; returns bucket → manifest
+        entries of the files written. The attempt's directory is fresh,
+        so a refused or crashed attempt leaves orphans, never a
+        half-overwritten committed snapshot."""
+        out_dir = self._io.join(self.path, "data/s%08d-%s" % (
+            m["snapshot_id"] + 1, uuid.uuid4().hex))
+        (df.repartition(n_parts, "bucket")
+         .write.partitionBy("bucket").parquet(out_dir))
+        return {
+            self._io.basename(d).split("=", 1)[1]: [
+                {"path": self._io.relpath(p, self.path),
+                 "schema_id": m["schema_id"]}
+                for p in self._io.glob(self._io.join(d, "*.parquet"))]
+            for d in self._io.glob(self._io.join(out_dir, "bucket=*"))}
 
     def head(self) -> dict:
         snap = int(self._io.read_text(
@@ -161,16 +207,12 @@ class LakeTable:
         old column name → new column name; added columns read as NULL from
         old files; dropped columns are projected away."""
         m = self.head()
-        new_id = m["schema_id"] + 1
-        m["schemas"][str(new_id)] = json.loads(new_schema.json())
-        if renames:
-            m["renames"][str(new_id)] = dict(renames)
-        m["schema_id"] = new_id
-        m["parent"] = m["snapshot_id"]
-        m["snapshot_id"] += 1
-        self._write_manifest(m)
-        self._commit_head(m["snapshot_id"], expected_parent=m["parent"])
-        return m["snapshot_id"]
+        new_id = str(m["schema_id"] + 1)
+        return self._commit(
+            m, schema_id=m["schema_id"] + 1,
+            schemas={**m["schemas"], new_id: json.loads(new_schema.json())},
+            renames={**m["renames"],
+                     **({new_id: dict(renames)} if renames else {})})
 
     def _align(self, df: DataFrame, from_schema_id: int,
                manifest: dict) -> DataFrame:
@@ -212,79 +254,45 @@ class LakeTable:
         m = self.head()
         if new_num_buckets == m["num_buckets"]:
             return m["snapshot_id"]
-        df = self.read(include_tombstones=True)
-        bucket_expr = F.pmod(F.xxhash64(F.col(m["key"])),
-                             F.lit(new_num_buckets)).cast("int")
-        new_snap = m["snapshot_id"] + 1
-        rel_dir = "data/s%08d" % new_snap
-        out_dir = self._io.join(self.path, rel_dir)
-        (df.withColumn("bucket", bucket_expr)
-           .repartition(new_num_buckets, "bucket")
-           .write.mode("overwrite").partitionBy("bucket")
-           .parquet(out_dir))
-        new_buckets = {}
-        cur_schema_id = m["schema_id"]
-        for bdir in self._io.glob(self._io.join(out_dir, "bucket=*")):
-            b = int(self._io.basename(bdir).split("=", 1)[1])
-            paths = [self._io.relpath(p, self.path)
-                     for p in self._io.glob(
-                         self._io.join(bdir, "*.parquet"))]
-            new_buckets[str(b)] = [
-                {"path": p, "schema_id": cur_schema_id} for p in paths]
-        m2 = dict(m)
-        m2["snapshot_id"] = new_snap
-        m2["parent"] = m["snapshot_id"]
-        m2["num_buckets"] = new_num_buckets
-        m2["buckets"] = new_buckets
-        self._write_manifest(m2)
-        self._commit_head(new_snap, expected_parent=m["snapshot_id"])
-        return new_snap
+        df = self._state_resolved(m).withColumn(
+            "bucket", _bucket(m["key"], new_num_buckets))
+        return self._commit(
+            m, num_buckets=new_num_buckets,
+            buckets=self._write_buckets(df, m, new_num_buckets))
 
     # -- read ----------------------------------------------------------------
 
-    def _read_files(self, groups: dict, manifest: dict) -> DataFrame | None:
-        """groups: schema_id -> [paths]; returns aligned union or None.
-        Files are read under the manifest's schema for their version
-        (plus the tombstone flag) — parquet schema inference would cost
-        a Spark job per group — and a column a batch lacked reads as
-        NULL, as ``_align`` fills it."""
+    def _read_buckets(self, manifest: dict, buckets,
+                      align_to: dict | None = None) -> DataFrame | None:
+        """The files of the selected buckets, aligned to ``align_to``
+        (default: ``manifest``); None when no file is selected. Each
+        group of files is read under the schema version it was written
+        with (plus the tombstone flag) — parquet schema inference would
+        cost a Spark job per group — and a column a batch lacked reads
+        as NULL, as ``_align`` fills it."""
+        target = align_to or manifest
+        sel = {int(b) for b in buckets}
+        groups: dict = {}
+        for b, files in manifest["buckets"].items():
+            if int(b) in sel:
+                for entry in files:
+                    groups.setdefault(entry["schema_id"], []).append(
+                        self._io.join(self.path, entry["path"]))
         parts = []
         for sid, paths in groups.items():
-            if not paths:
-                continue
-            written = T.StructType.fromJson(manifest["schemas"][str(sid)])
+            written = T.StructType.fromJson(target["schemas"][str(sid)])
             written = written.add(OP_COL, T.StringType())
             df = self.spark.read.schema(written).parquet(*paths)
-            parts.append(self._align(df, int(sid), manifest))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            parts.append(self._align(df, int(sid), target))
+        return reduce(DataFrame.unionByName, parts) if parts else None
 
-    def _file_groups(self, manifest: dict, buckets=None) -> dict:
-        groups: dict = {}
-        sel = None if buckets is None else {int(b) for b in buckets}
-        for b, files in manifest["buckets"].items():
-            if sel is not None and int(b) not in sel:
-                continue
-            for entry in files:
-                groups.setdefault(entry["schema_id"], []).append(
-                    self._io.join(self.path, entry["path"]))
-        return groups
-
-    def _has_delta(self, manifest: dict, buckets=None) -> bool:
-        """True when any selected bucket carries delta files (merge-on-
-        read): its rows are then base ∪ deltas and need a read-time LWW
-        to resolve to table state."""
-        sel = None if buckets is None else {int(b) for b in buckets}
-        for b, files in manifest["buckets"].items():
-            if sel is not None and int(b) not in sel:
-                continue
-            if any(entry.get("delta") for entry in files):
-                return True
-        return False
+    @staticmethod
+    def _delta_buckets(manifest: dict, min_files: int = 1) -> list:
+        """Buckets carrying at least ``min_files`` delta files (merge-on-
+        read): their rows are base ∪ deltas and need a read-time LWW to
+        resolve to table state."""
+        return [b for b, files in manifest["buckets"].items()
+                if sum(1 for e in files if e.get("delta")) >= min_files]
 
     def _state_resolved(self, manifest: dict, buckets=None,
                         align_to: dict | None = None) -> DataFrame:
@@ -297,33 +305,22 @@ class LakeTable:
         trickle batches touched 1% of buckets pays the resolve shuffle
         on 1% of its rows, not a full-table shuffle. ``align_to`` reads
         under a different (later) manifest's schema (changelog use)."""
-        man_align = align_to or manifest
         sel = (list(manifest["buckets"].keys()) if buckets is None
                else [str(int(b)) for b in buckets])
-        delta_bs = [b for b in sel
-                    if any(e.get("delta")
-                           for e in manifest["buckets"].get(b, []))]
-        clean_bs = [b for b in sel if b not in set(delta_bs)]
-        parts = []
-        clean = self._read_files(
-            self._file_groups(manifest, clean_bs), man_align)
-        if clean is not None:
-            parts.append(clean)
-        if delta_bs:
-            raw = self._read_files(
-                self._file_groups(manifest, delta_bs), man_align)
-            if raw is not None:
-                parts.append(last_writer_wins(
-                    raw, key=manifest["key"],
-                    order=tuple(manifest["order"])))
+        deltas = set(self._delta_buckets(manifest))
+        parts = [self._read_buckets(
+            manifest, [b for b in sel if b not in deltas], align_to)]
+        raw = self._read_buckets(
+            manifest, [b for b in sel if b in deltas], align_to)
+        if raw is not None:
+            parts.append(last_writer_wins(
+                raw, key=manifest["key"], order=tuple(manifest["order"])))
+        parts = [p for p in parts if p is not None]
         if not parts:
-            fields = list(self.schema(man_align).fields)
+            fields = list(self.schema(align_to or manifest).fields)
             fields.append(T.StructField(OP_COL, T.StringType()))
             return self.spark.createDataFrame([], T.StructType(fields))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     def manifest(self, snapshot_id: int) -> dict:
         p = self._io.join(self.meta_dir,
@@ -487,8 +484,7 @@ class LakeTable:
         src = src.select(*[c for c in (*target_names, OP_COL)
                            if c in src.columns])
 
-        bucket_expr = F.pmod(F.xxhash64(F.col(key)), F.lit(nbuckets)) \
-            .cast("int")
+        bucket_expr = _bucket(key, nbuckets)
         if mode == "delta":
             # delta commits never read existing buckets, so `touched`
             # is not needed BEFORE the write — it is derived from the
@@ -536,7 +532,7 @@ class LakeTable:
             # in one aggregate (and the rewrite folds the deltas away).
             # Existing rows carry no count, so the summed count stays
             # the batch's own
-            existing = self._read_files(self._file_groups(m, touched), m)
+            existing = self._read_buckets(m, touched)
             if existing is not None:
                 existing = existing.withColumn("bucket", bucket_expr)
                 combined = last_writer_wins(
@@ -560,63 +556,29 @@ class LakeTable:
             F.max(_KEY_EVENTS).alias("top_key_events")) \
             .drop(_KEY_EVENTS)
 
-        new_snap = m["snapshot_id"] + 1
-        rel_dir = "data/s%08d" % new_snap
-        out_dir = self._io.join(self.path, rel_dir)
         # cow: one task per touched bucket (winners are bucket-grouped
         # already). delta: touched is unknown pre-write — hash the small
         # winner set across the session's parallelism instead
         n_parts = (max(len(touched), 1) if touched is not None
                    else self.spark.sparkContext.defaultParallelism)
-        (combined
-         .repartition(n_parts, "bucket")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(out_dir))
-
-        written = {
-            int(self._io.basename(d).split("=", 1)[1])
-            for d in self._io.glob(self._io.join(out_dir, "bucket=*"))}
-        if touched is None:
-            # delta mode: the written directories ARE the touched set
-            touched = sorted(written)
-        else:
-            # reconcile what was actually written against the `touched`
-            # set computed from the separate key-scan job: a
+        written = self._write_buckets(combined, m, n_parts)
+        if mode == "delta":
+            # the written directories ARE the touched set
+            written = {b: m["buckets"].get(b, []) +
+                       [dict(e, delta=True) for e in entries]
+                       for b, entries in written.items()}
+        elif set(written) != {str(b) for b in touched}:
+            # the touched set came from a separate key-scan job: a
             # nondeterministic batch (unstable UDF/source) could place
-            # winner rows in buckets the key scan never saw — silently
-            # omitting those directories from the manifest would be row
-            # loss with no error
-            unexpected = written - set(touched)
-            if unexpected:
-                raise EngineError(
-                    "merge wrote unexpected bucket directories %s "
-                    "(touched set was %s): the batch is nondeterministic "
-                    "between jobs — aborting before commit so no rows "
-                    "are lost" % (sorted(unexpected), touched))
-
-        new_buckets = dict(m["buckets"])
-        cur_schema_id = m["schema_id"]
-        for b in touched:
-            paths = [
-                self._io.relpath(p, self.path)
-                for p in self._io.glob(self._io.join(
-                    out_dir, "bucket=%d" % b, "*.parquet"))
-            ]
-            if mode == "delta":
-                new_buckets[str(b)] = list(m["buckets"].get(str(b), [])) + [
-                    {"path": p, "schema_id": cur_schema_id, "delta": True}
-                    for p in paths]
-            else:
-                new_buckets[str(b)] = [
-                    {"path": p, "schema_id": cur_schema_id} for p in paths]
-
-        m2 = dict(m)
-        m2["snapshot_id"] = new_snap
-        m2["parent"] = m["snapshot_id"]
-        m2["batch_id"] = batch_id
-        m2["buckets"] = new_buckets
-        self._write_manifest(m2)
-        self._commit_head(new_snap, expected_parent=m["snapshot_id"])
+            # winner rows in buckets that scan never saw, or none in one
+            # it did — committing either would lose rows with no error
+            raise EngineError(
+                "merge wrote bucket directories %s but the batch keys hash "
+                "to buckets %s: the batch is nondeterministic between jobs "
+                "— aborting before commit so no rows are lost"
+                % (sorted(written, key=int), touched))
+        new_snap = self._commit(m, batch_id=batch_id,
+                                buckets={**m["buckets"], **written})
 
         stats = obs.get
         top = stats.get("top_key_events")
@@ -625,7 +587,7 @@ class LakeTable:
             rows_in=int(stats.get("rows_in") or 0),
             winners=int(stats.get("winners") or 0),
             tombstones=int(stats.get("tombstones") or 0),
-            buckets_touched=len(touched),
+            buckets_touched=len(written),
             top_key_events=None if top is None else int(top))
 
     def rollback(self, snapshot_id: int) -> int:
@@ -646,55 +608,24 @@ class LakeTable:
         m = self.head()
         if snapshot_id == m["snapshot_id"]:
             return snapshot_id
-        m2 = dict(target)
-        m2["snapshot_id"] = m["snapshot_id"] + 1
-        m2["parent"] = m["snapshot_id"]
-        self._write_manifest(m2)
-        self._commit_head(m2["snapshot_id"],
-                          expected_parent=m["snapshot_id"])
-        return m2["snapshot_id"]
+        return self._commit(m, **target)
 
-    def compact(self, buckets=None) -> int:
+    def compact(self, min_deltas: int = 1) -> int:
         """Fold delta files back into a single base file set per bucket
         (the maintenance half of ``merge(mode="delta")`` — the analog of
         Iceberg's rewrite_data_files over MOR deletes). Only buckets
-        that actually carry deltas are read and rewritten; the rest keep
-        their entries untouched. ``buckets`` restricts further (compact
-        incrementally, a shard at a time, at 10^10 rows). Tombstones are
-        retained, batch id preserved — exactly-once resume and replay
+        carrying at least ``min_deltas`` delta files are read, resolved
+        by the read-time LWW and rewritten; the rest keep their entries
+        untouched, so a trickle run compacts incrementally (``CDCPipeline``
+        passes its ``compact_after_deltas``). Tombstones are retained,
+        batch id preserved — exactly-once resume and replay
         order-insensitivity are unaffected. Returns the new snapshot id
         (or the current one when there was nothing to fold)."""
         m = self.head()
-        sel = None if buckets is None else {int(b) for b in buckets}
-        target = sorted(
-            int(b) for b, files in m["buckets"].items()
-            if any(e.get("delta") for e in files)
-            and (sel is None or int(b) in sel))
+        target = self._delta_buckets(m, min_deltas)
         if not target:
             return m["snapshot_id"]
-        df = self._read_files(self._file_groups(m, target), m)
-        resolved = last_writer_wins(df, key=m["key"],
-                                    order=tuple(m["order"]))
-        bucket_expr = F.pmod(F.xxhash64(F.col(m["key"])),
-                             F.lit(m["num_buckets"])).cast("int")
-        new_snap = m["snapshot_id"] + 1
-        out_dir = self._io.join(self.path, "data/s%08d" % new_snap)
-        (resolved.withColumn("bucket", bucket_expr)
-         .repartition(len(target), "bucket")
-         .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
-        new_buckets = dict(m["buckets"])
-        for b in target:
-            paths = [
-                self._io.relpath(p, self.path)
-                for p in self._io.glob(self._io.join(
-                    out_dir, "bucket=%d" % b, "*.parquet"))
-            ]
-            new_buckets[str(b)] = [
-                {"path": p, "schema_id": m["schema_id"]} for p in paths]
-        m2 = dict(m)
-        m2["snapshot_id"] = new_snap
-        m2["parent"] = m["snapshot_id"]
-        m2["buckets"] = new_buckets
-        self._write_manifest(m2)
-        self._commit_head(new_snap, expected_parent=m["snapshot_id"])
-        return new_snap
+        resolved = self._state_resolved(m, target).withColumn(
+            "bucket", _bucket(m["key"], m["num_buckets"]))
+        written = self._write_buckets(resolved, m, len(target))
+        return self._commit(m, buckets={**m["buckets"], **written})

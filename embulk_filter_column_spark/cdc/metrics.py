@@ -25,6 +25,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..fsio import io_for
 
@@ -45,18 +46,6 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("wall_sec", T.DoubleType()),
 ])
 
-_LINEAGE_PA = pa.schema([
-    ("batch_id", pa.int64()), ("chunk_lo", pa.int64()),
-    ("chunk_hi", pa.int64()), ("snapshot_id", pa.int64()),
-    ("skipped", pa.bool_()),
-])
-
-_METRICS_PA = pa.schema([
-    ("batch_id", pa.int64()), ("rows_in", pa.int64()),
-    ("winners", pa.int64()), ("tombstones", pa.int64()),
-    ("buckets_touched", pa.int64()), ("wall_sec", pa.float64()),
-])
-
 
 class BatchJournal:
     def __init__(self, spark: SparkSession, lake_path: str):
@@ -65,13 +54,14 @@ class BatchJournal:
         self.lineage_path = self._io.join(lake_path, "_lineage")
         self.metrics_path = self._io.join(lake_path, "_metrics")
 
-    def _put(self, path: str, schema: pa.Schema, row: dict,
+    def _put(self, path: str, schema: T.StructType, row: dict,
              overwrite: bool) -> None:
         f = self._io.join(path, "part-%08d.parquet" % row["batch_id"])
         if not overwrite and self._io.exists(f):
             return
         buf = pa.BufferOutputStream()
-        pq.write_table(pa.Table.from_pylist([row], schema=schema), buf)
+        pq.write_table(pa.Table.from_pylist(
+            [row], schema=to_arrow_schema(schema)), buf)
         self._io.write_atomic(f, buf.getvalue().to_pybytes())
 
     def record(self, result, chunk_lo: int, chunk_hi: int,
@@ -81,18 +71,22 @@ class BatchJournal:
         rollback shows the new snapshot; a skipped merge (the crash
         replay of a committed batch) keeps the rows already there."""
         overwrite = not result.skipped
-        self._put(self.lineage_path, _LINEAGE_PA, {
+        self._put(self.lineage_path, LINEAGE_SCHEMA, {
             "batch_id": result.batch_id, "chunk_lo": chunk_lo,
             "chunk_hi": chunk_hi, "snapshot_id": result.snapshot_id,
             "skipped": result.skipped}, overwrite)
-        self._put(self.metrics_path, _METRICS_PA, {
+        self._put(self.metrics_path, METRICS_SCHEMA, {
             "batch_id": result.batch_id, "rows_in": result.rows_in,
             "winners": result.winners, "tombstones": result.tombstones,
             "buckets_touched": result.buckets_touched,
             "wall_sec": float(wall_sec)}, overwrite)
 
+    # read under the declared schemas: parquet schema inference would
+    # cost a Spark job per call
     def lineage(self):
-        return self.spark.read.parquet(self.lineage_path)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
+            self.lineage_path)
 
     def metrics(self):
-        return self.spark.read.parquet(self.metrics_path)
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(
+            self.metrics_path)

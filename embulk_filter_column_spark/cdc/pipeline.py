@@ -123,10 +123,11 @@ class CDCPipeline:
         # "delta" appends only the batch winners as merge-on-read delta
         # files (small/trickle batches — see LakeTable.merge docstring).
         # compact_after_deltas bounds read amplification in delta mode:
-        # after each merge, buckets that accumulated >= N delta files
-        # are folded back to base (driver-side manifest scan picks the
-        # buckets; only those are rewritten) — without it, a long
-        # trickle run degrades every read into an ever-wider LWW union
+        # after each applied merge, lake.compact(min_deltas=N) folds the
+        # buckets that accumulated >= N delta files back to base (the
+        # lake picks them from its manifest; only those are rewritten)
+        # — without it, a long trickle run degrades every read into an
+        # ever-wider LWW union
         self.merge_mode = merge_mode
         self.compact_after_deltas = compact_after_deltas
         # hot-key skew defense: fan the in-batch LWW out over this many
@@ -374,12 +375,7 @@ class CDCPipeline:
                                    and rows_in else None)
             if (self.compact_after_deltas and not result.skipped
                     and hasattr(lake, "compact")):
-                m = lake.head()
-                over = [int(b) for b, files in m["buckets"].items()
-                        if sum(1 for e in files if e.get("delta"))
-                        >= self.compact_after_deltas]
-                if over:
-                    lake.compact(buckets=over)
+                lake.compact(min_deltas=self.compact_after_deltas)
             self.journal.record(result, lo, hi, time.monotonic() - t0)
             self.checkpoint.commit(hi, batch_id)
             results.append(result)

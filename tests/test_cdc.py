@@ -387,6 +387,64 @@ def test_concurrent_commit_detected(spark, wal, tmp_path):
     assert lake.head()["snapshot_id"] == head
 
 
+def _url_events(spark, lo, hi, n_urls=40):
+    """Inserts ``seq`` in [lo, hi) over ``n_urls`` urls."""
+    from pyspark.sql import functions as F
+
+    return spark.range(lo, hi).select(
+        F.lit("I").alias("op"),
+        F.col("id").alias("seq"),
+        F.concat(F.lit("https://s"), F.pmod(F.col("id"), F.lit(n_urls)),
+                 F.lit(".example.com/")).alias("url"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id"))
+         .alias("warc_ts"),
+        F.sha2(F.col("id").cast("string"), 256).alias("text"))
+
+
+@pytest.mark.parametrize("op", ["cow_merge", "delta_merge", "compact",
+                                "rebucket", "evolve", "rollback"])
+def test_stale_writer_leaves_committed_snapshot_intact(spark, tmp_path, op):
+    """A writer working from a stale HEAD is refused before it touches
+    the snapshot committed in between: that snapshot keeps its manifest
+    and its data files, whichever commit path the stale writer takes."""
+    import copy
+
+    from pyspark.sql import types as T
+
+    lake_dir = str(tmp_path / "lake")
+    events = _url_events(spark, 0, 200)
+    lake = LakeTable.create(spark, lake_dir, events.drop("op").schema,
+                            num_buckets=4)
+    lake.merge(events.where("seq < 100"), batch_id=1)
+    lake.merge(events.where("seq >= 100"), batch_id=2, mode="delta")
+    stale = lake.head()
+    # another writer commits snapshot 3
+    lake.merge(_url_events(spark, 200, 260), batch_id=3)
+    committed = lake.head()
+    state = final_pairs(lake.read())
+
+    writer = LakeTable(spark, lake_dir)
+    writer.head = lambda: copy.deepcopy(stale)
+    assert writer._delta_buckets(writer.head())  # compact has work
+    batch = _url_events(spark, 300, 330)
+    wider = T.StructType(writer.schema().fields
+                         + [T.StructField("extra", T.StringType())])
+    attempt = {
+        "cow_merge": lambda: writer.merge(batch, batch_id=4),
+        "delta_merge": lambda: writer.merge(batch, batch_id=4,
+                                            mode="delta"),
+        "compact": writer.compact,
+        "rebucket": lambda: writer.rebucket(8),
+        "evolve": lambda: writer.evolve(wider),
+        "rollback": lambda: writer.rollback(1),
+    }[op]
+    with pytest.raises(EngineError, match="concurrent commit"):
+        attempt()
+    assert lake.head() == committed
+    assert lake.snapshot_ids() == [0, 1, 2, 3]
+    assert final_pairs(lake.read()) == state
+
+
 def test_changelog_between_snapshots(spark, wal, tmp_path):
     """changes(s1, s2) = per-key diff with insert/update/delete types;
     composing consecutive changelogs onto the old state reproduces the
@@ -779,11 +837,11 @@ def test_delta_merge_bounds_write_amplification(spark, tmp_path):
     assert state(mor) == state(cow)
 
     # deltas are really there, then compact() folds them
-    assert mor._has_delta(mor.head())
+    assert mor._delta_buckets(mor.head())
     want = state(mor)
     snap = mor.compact()
     assert snap == mor.head()["snapshot_id"]
-    assert not mor._has_delta(mor.head())
+    assert not mor._delta_buckets(mor.head())
     assert state(mor) == want
     # batch id preserved → replay of an old batch is still skipped
     assert mor.merge(mk_events(0, 10), batch_id=3).skipped
@@ -884,7 +942,7 @@ def test_rollback_and_replay(spark, wal, tmp_path):
     new_snap = lake.rollback(target)
     assert lake.head()["batch_id"] == 2
     assert new_snap == head["snapshot_id"] + 1  # history stays linear
-    assert final_pairs(lake.read()) != clean_state or True  # state moved
+    assert final_pairs(lake.read()) != clean_state  # state moved
 
     # rolling back to the current head is a no-op
     assert lake.rollback(new_snap) == new_snap
@@ -901,6 +959,30 @@ def test_rollback_and_replay(spark, wal, tmp_path):
                      for r in pipe.journal.lineage().collect())
     assert lineage == [(r.batch_id, r.snapshot_id)
                        for r in first[:2] + results[2:]]
+
+    # the rest of the commit paths extend the same linear history:
+    # evolve, a delta merge (re-merging every event leaves the state
+    # as it is), compact and rebucket
+    from pyspark.sql import types as T
+
+    want = oracle_state(spark, wal)
+    want = sorted(zip(want["url"], want["text"]))
+    assert clean_state == want
+    lake.evolve(T.StructType(lake.schema().fields
+                             + [T.StructField("extra", T.StringType())]))
+    lake.merge(spark.read.parquet(wal).drop("chunk"), batch_id=5,
+               mode="delta")
+    assert lake._delta_buckets(lake.head())
+    assert final_pairs(lake.read()) == want
+    lake.compact()
+    assert not lake._delta_buckets(lake.head())
+    assert final_pairs(lake.read()) == want
+    lake.rebucket(4)
+    assert lake.head()["num_buckets"] == 4
+    assert final_pairs(lake.read()) == want
+    ids = lake.snapshot_ids()
+    assert ids == list(range(lake.head()["snapshot_id"] + 1))
+    assert [lake.manifest(s)["parent"] for s in ids] == [None, *ids[:-1]]
 
 
 def test_lake_on_file_scheme_uri_end_to_end(spark, tmp_path):

@@ -201,9 +201,9 @@ def test_streaming_delta_mode_matches_oracle(spark, wal, tmp_path):
     table = job.table()
     got = sorted((r["url"], r["text"]) for r in table.read().collect())
     assert got == oracle_pairs(spark, wal)
-    assert table._has_delta(table.head())
+    assert table._delta_buckets(table.head())
     table.compact()
-    assert not table._has_delta(table.head())
+    assert not table._delta_buckets(table.head())
     assert sorted((r["url"], r["text"])
                   for r in table.read().collect()) == got
 
