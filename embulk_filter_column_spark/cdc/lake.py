@@ -344,7 +344,11 @@ class LakeTable:
         expire_snapshots). COW merges rewrite whole buckets, so without
         expiry every snapshot pins a full copy of its touched buckets —
         unbounded storage at 10^10 rows. Time travel remains available
-        within the kept window. Returns the number of files removed."""
+        within the kept window. Every file under ``data/`` that is
+        neither a retained parquet file nor its ``.<name>.crc`` sidecar
+        goes (``_SUCCESS`` markers included), so expired and refused
+        attempt directories are pruned whole. Returns the number of
+        parquet files removed."""
         if keep_last < 1:
             # ids[-0:] would slice the whole list and expire nothing —
             # reject instead of silently inverting the caller's intent
@@ -358,13 +362,14 @@ class LakeTable:
             for files in m["buckets"].values():
                 for entry in files:
                     live.add(entry["path"])
+        keep_files = live | {"%s/.%s.crc" % tuple(p.rsplit("/", 1))
+                              for p in live}
         removed = 0
         data_root = self._io.join(self.path, "data")
         for full in self._io.walk_files(data_root):
-            rel = self._io.relpath(full, self.path)
-            if rel not in live and full.endswith(".parquet"):
+            if self._io.relpath(full, self.path) not in keep_files:
                 self._io.delete(full)
-                removed += 1
+                removed += full.endswith(".parquet")
         # prune now-empty snapshot dirs and expired manifests
         self._io.remove_empty_dirs(data_root)
         for sid in ids:

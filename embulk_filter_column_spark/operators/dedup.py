@@ -38,10 +38,11 @@ from ..functions.vectors import cosine_similarity, hyperplane_bucket
 
 def _has_tokens(text_col: str):
     """Cheap predicate: the normalized text has at least one token.
-    Used to pre-filter shingle-less docs BEFORE the expensive signature
-    projection — filtering on the signature column itself afterwards
-    gets pushdown-substituted below the projection and evaluates the
-    whole signature twice (measured 3× on the minhash query).
+    ``simhash_near_dup_pairs`` uses it to pre-filter token-less docs
+    BEFORE the expensive signature projection — filtering on the
+    signature column itself afterwards gets pushdown-substituted below
+    the projection and evaluates the whole signature twice (measured 3×
+    on the minhash query).
 
     Normalization replaces every non-[a-z0-9 whitespace] run with a
     space and tokenizes on whitespace, so a token exists iff the text
@@ -464,6 +465,11 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     collision math (min over a uniformly-hashed set). One native
     expression per hash function — no UDF.
 
+    NULL contract: a document with an empty shingle set (empty,
+    whitespace-only, punctuation-only or NULL text) gets a NULL
+    ``minhash``, never an all-``Long.MaxValue`` array that would put
+    every such document into one band bucket.
+
     The shingle array is materialized in its OWN projection first:
     referencing the (expensive) shingle expression from ``num_hashes``
     sibling expressions would otherwise inline it num_hashes times —
@@ -497,20 +503,14 @@ def minhash_band_keys(df: DataFrame, text_col: str = "text",
                       seed: int = 42) -> DataFrame:
     """Exploded banded-LSH index entries: ``(id, band, key)`` — one row
     per document per band, key = hash of the band's signature slice.
-    Shared by the one-shot blocker (``minhash_lsh_candidates``) and the
-    persistent incremental index (``incremental.MinHashIndex``), so a
-    corpus indexed by one is probe-compatible with the other at equal
-    parameters. Shingle-less docs (empty/whitespace text) are dropped:
-    their null signatures would all share one band key and
-    pair-explode, and an empty shingle set has no meaningful Jaccard
-    neighbors (exact_dedup still collapses identical empty texts)."""
-    rows = num_hashes // bands
-    with_sig = minhash_signature(df.where(_has_tokens(text_col)),
-                                 text_col, num_hashes, shingle_n, seed)
-    return (with_sig
-            .select(F.col(id_col),
-                    F.explode(_band_key_cols(bands, rows)).alias("bk"))
-            .select(id_col, "bk.band", "bk.key"))
+    The one band-key derivation: ``_shingle_docs`` followed by
+    ``minhash_band_keys_from_shingles``, shared by the one-shot blocker
+    (``minhash_lsh_candidates``) and the persistent incremental index
+    (``incremental.MinHashIndex``), so a corpus indexed by one is
+    probe-compatible with the other at equal parameters."""
+    return minhash_band_keys_from_shingles(
+        _shingle_docs(df, text_col, id_col, shingle_n), id_col,
+        num_hashes, bands, seed)
 
 
 def minhash_band_keys_from_shingles(shingled: DataFrame,
@@ -518,14 +518,14 @@ def minhash_band_keys_from_shingles(shingled: DataFrame,
                                     num_hashes: int = 16,
                                     bands: int = 4,
                                     seed: int = 42) -> DataFrame:
-    """``minhash_band_keys`` computed from an existing ``_shingle_docs``
-    frame instead of raw text — IDENTICAL keys at equal parameters (the
-    signature is a per-hash-function min over the distinct shingle-hash
-    set, so the sorted/distinct ``sh`` array yields the same mins, and
-    ``n > 0`` is exactly the ``_has_tokens`` condition). Lets the
-    persistent ``incremental.MinHashIndex`` derive its band entries
+    """``minhash_band_keys`` over an existing ``_shingle_docs`` frame:
+    the persistent ``incremental.MinHashIndex`` derives its band entries
     from the checkpointed shingle projection it needs anyway for exact
-    verification — one tokenize scan per batch instead of two."""
+    verification — one tokenize scan per batch instead of two.
+    Shingle-less docs (``n = 0``: empty, whitespace or NULL text) are
+    dropped: their NULL signatures would all share one band key and
+    pair-explode, and an empty shingle set has no meaningful Jaccard
+    neighbors (exact_dedup still collapses identical empty texts)."""
     rows = num_hashes // bands
     with_sig = (shingled.where(F.col("n") > 0)
                 .withColumn("minhash",

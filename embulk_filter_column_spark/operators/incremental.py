@@ -1,12 +1,12 @@
-"""Incremental corpus dedup: a persistent fingerprint index that new
-batches are checked against — the streaming counterpart of
-``exact_dedup`` (a one-shot groupBy can't answer "is this NEW document
-a duplicate of anything ingested last month?" without rescanning the
-corpus).
+"""Incremental corpus dedup: persistent indexes that new batches are
+checked against — the streaming counterparts of ``exact_dedup``
+(``FingerprintIndex``) and ``minhash_lsh_pairs`` (``MinHashIndex``). A
+one-shot groupBy can't answer "is this NEW document a duplicate of
+anything ingested last month?" without rescanning the corpus.
 
-Layout: a parquet directory partitioned by ``bucket =
-pmod(fingerprint, num_buckets)`` holding ``(fingerprint, doc_id)`` of
-everything ever accepted. Per batch:
+``FingerprintIndex`` layout: a parquet directory partitioned by
+``bucket = pmod(fingerprint, num_buckets)`` holding ``(fingerprint,
+doc_id)`` of everything ever accepted. Per batch:
 
 1. fingerprint the batch (same normalized 64-bit fingerprint as
    ``exact_dedup`` — case/punctuation jitter collapses);
@@ -23,6 +23,16 @@ everything ever accepted. Per batch:
    broadcast regime.)
 4. append the survivors' fingerprints to their bucket partitions.
 
+Both indexes share one persisted-index protocol (``_JournaledIndex``);
+a subclass keeps only its decision logic and its index layout.
+
+Format pin: ``{path}/_params.json`` records the index's ``format`` and
+parameters (``_PARAMS``) at creation. Reopening under a different
+format or parameter set raises and names both sets, and a non-empty
+directory without ``_params.json`` raises "unversioned index": a probe
+with another bucket count or band-key derivation reads the wrong
+bucket directories and would silently match nothing.
+
 Crash safety (ADVICE r3): the accept/reject decision is a SIDE EFFECT
 (the index append), so a naive implementation that crashes after the
 append and replays the batch would anti-join the batch against its own
@@ -30,12 +40,16 @@ fingerprints and silently drop every first-seen document. Passing a
 ``batch_id`` makes the operation replay-safe with the same
 skip-or-replay contract as the CDC lake's idempotent MERGE commits:
 
-* the survivor set is journaled to ``{path}/_journal/batch=<id>``
-  BEFORE the index is touched — the journal write is the commit point;
-* replaying a journaled batch returns the RECORDED survivors (no
-  recompute, no self-anti-join) and completes the index append if the
-  crash interrupted it (a re-append can at worst duplicate fingerprint
-  rows in the index, which is harmless for anti-join semantics — the
+* the decision's named journal parts are written to
+  ``{path}/_journal/batch=<id>/<part>`` BEFORE the index is touched,
+  then ``_journal/batch=<id>/_COMMIT`` is written atomically holding
+  each part's schema as JSON — the marker is the commit point;
+* replaying a committed batch reads the parts back under the recorded
+  schemas and returns the RECORDED survivors (no recompute, no
+  self-anti-join, no schema-inference job), and completes the index
+  append if the crash interrupted it (``batch=<id>._indexed`` marks a
+  finished append; a re-append can at worst duplicate index rows,
+  which is harmless for anti-join and candidate-pair semantics — the
   lossy failure mode is gone).
 
 Without a ``batch_id`` the legacy single-shot behavior applies: the
@@ -45,6 +59,7 @@ append and its own downstream commit.
 
 from __future__ import annotations
 
+import json
 import re
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -53,6 +68,13 @@ from pyspark.sql import types as T
 
 from ..fsio import io_for
 from ..functions.text import doc_fingerprint
+from .dedup import (
+    DEFAULT_MAX_BUCKET,
+    _bucket_pairs,
+    _shingle_docs,
+    _verify_jaccard,
+    minhash_band_keys_from_shingles,
+)
 
 
 def _run_concurrently(*thunks) -> None:
@@ -60,9 +82,12 @@ def _run_concurrently(*thunks) -> None:
     task waves overlap (guide §2.6 — actions are only sequential
     because driver code calls them sequentially). InheritableThread
     propagates the JVM thread-locals (job group/description) and cleans
-    up pinned-thread state."""
+    up pinned-thread state. A single thunk runs inline."""
     from pyspark import InheritableThread
 
+    if len(thunks) == 1:
+        thunks[0]()
+        return
     errs: list = []
 
     def _wrap(t):
@@ -83,9 +108,20 @@ def _run_concurrently(*thunks) -> None:
 
 
 class _JournaledIndex:
-    """Shared skip-or-replay batch journal for persistent dedup indexes
-    (see module docstring for the crash contract): journal survivors →
-    commit marker → index append → indexed marker."""
+    """The persisted-index protocol of both dedup indexes (module
+    docstring): params/format pin, skip-or-replay batch journal
+    (journal parts → ``_COMMIT`` → index append → ``._indexed``),
+    declared-schema reads and the bucketed append. A subclass declares
+    ``FORMAT``, ``_PARAMS`` (the attributes stored in ``_params.json``
+    next to ``format``) and ``_SURVIVORS`` (the journal part whose id
+    column is the survivor set), and implements ``_decide`` (the named
+    journal parts of a fresh batch; with ``pin`` they must not read
+    the index lazily, because no journal write pins them) and
+    ``_append`` (the index append of those parts)."""
+
+    FORMAT: int
+    _PARAMS: tuple
+    _SURVIVORS: str
 
     def __init__(self, spark: SparkSession, path: str,
                  num_buckets: int = 64):
@@ -96,6 +132,28 @@ class _JournaledIndex:
         # index can live on the same store as its parquet (fsio docstring)
         self._io = io_for(spark, path)
         self.num_buckets = num_buckets
+        self._pin_params()
+
+    def _pin_params(self) -> None:
+        p = self._io.join(self.path, "_params.json")
+        mine = {"format": self.FORMAT,
+                **{k: getattr(self, k) for k in self._PARAMS}}
+        if self._io.exists(p):
+            stored = json.loads(self._io.read_text(p))
+            if stored != mine:
+                raise ValueError(
+                    "%s at %s was built with %s — reopening with %s would "
+                    "probe an incompatible layout"
+                    % (type(self).__name__, self.path, stored, mine))
+        # hidden names are crash leftovers of the write below
+        elif any(not n.startswith(".")
+                 for n in self._io.listnames(self.path)):
+            raise ValueError(
+                "unversioned index at %s: the directory is not empty but "
+                "has no _params.json, so its format and parameters are "
+                "unknown — rebuild it" % self.path)
+        else:
+            self._io.write_atomic(p, json.dumps(mine).encode())
 
     # batch ids become path components under _journal/ — a '/' or '..'
     # would write outside the journal root and break the journal-dir
@@ -113,13 +171,93 @@ class _JournaledIndex:
     def _journal_dir(self, batch_id: str) -> str:
         return self._io.join(self.path, "_journal", f"batch={batch_id}")
 
-    def _journal_committed(self, batch_id: str) -> bool:
-        return self._io.exists(
-            self._io.join(self._journal_dir(batch_id), "_SUCCESS"))
-
     def _indexed_marker(self, batch_id: str) -> str:
         return self._io.join(self.path, "_journal",
                              f"batch={batch_id}._indexed")
+
+    def _bucket(self, col) -> F.Column:
+        return F.pmod(col, F.lit(self.num_buckets)).cast("int")
+
+    def _append_bucketed(self, df: DataFrame, path: str, col: str,
+                         key) -> None:
+        # one write task per bucket (the same bound the lake's COW merge
+        # uses): repartition(col) alone would spread the tiny append
+        # over spark.sql.shuffle.partitions mostly-empty tasks
+        (df.withColumn(col, self._bucket(key))
+         .repartition(self.num_buckets, col)
+         .write.mode("append").partitionBy(col)
+         .parquet(path))
+
+    def _slice(self, path: str, fields: list, col: str,
+               buckets) -> DataFrame | None:
+        """Pruned scan of one bucketed index part under a declared
+        schema (``fields`` plus the int ``col``): only the ``col=<b>``
+        directories of the listed buckets (plan-time partition prune,
+        pytest-pinned). None when none of them exists, e.g. before the
+        first append — the caller then skips the probe."""
+        names = set(self._io.listnames(path))
+        if not any("%s=%d" % (col, b) in names for b in buckets):
+            return None
+        schema = T.StructType(
+            list(fields) + [T.StructField(col, T.IntegerType())])
+        return (self.spark.read.schema(schema).parquet(path)
+                .where(F.col(col).isin(list(buckets))))
+
+    def dedup_ids(self, df: DataFrame, text_col: str = "text",
+                  id_col: str = "doc_id",
+                  batch_id: str | None = None) -> DataFrame:
+        """The accept/reject decision alone: a small materialized frame
+        of the batch's surviving ``id_col`` values, with the same
+        journal / index-append side effects as ``dedup_and_update``.
+        Callers that only need the id set — the CDC pipeline's
+        ingest-time content check semi-joins its batch on exactly this —
+        skip the row-level re-join entirely."""
+        if batch_id is None:
+            parts = self._decide(df, text_col, id_col, pin=True)
+            self._append(parts, id_col)
+            return parts[self._SURVIVORS].select(id_col)
+        jd = self._journal_dir(self._check_batch_id(batch_id))
+        commit = self._io.join(jd, "_COMMIT")
+        fresh = not self._io.exists(commit)
+        if fresh:
+            # the journal write IS the materialization of the decision:
+            # reading it back pins it before the index mutates
+            parts = self._decide(df, text_col, id_col, pin=False)
+            _run_concurrently(*[
+                (lambda n=n, p=p: p.write.mode("overwrite")
+                 .parquet(self._io.join(jd, n)))
+                for n, p in parts.items()])
+            # commit point: one atomic marker after every part landed
+            schemas = {n: p.schema.jsonValue() for n, p in parts.items()}
+            self._io.write_atomic(commit, json.dumps(schemas).encode())
+        else:
+            # replay of a committed batch: the journaled decision is
+            # authoritative
+            schemas = json.loads(self._io.read_text(commit))
+        parts = {n: self.spark.read.schema(T.StructType.fromJson(s))
+                 .parquet(self._io.join(jd, n))
+                 for n, s in schemas.items()}
+        marker = self._indexed_marker(batch_id)
+        if fresh or not self._io.exists(marker):
+            self._append(parts, id_col)
+            self._io.touch(marker)
+        return parts[self._SURVIVORS].select(id_col)
+
+    def dedup_and_update(self, df: DataFrame, text_col: str = "text",
+                         id_col: str = "doc_id",
+                         batch_id: str | None = None) -> DataFrame:
+        """The batch rows that survive the index's decision (class
+        docstring), with their index entries appended. The decision is
+        MATERIALIZED inside ``dedup_ids`` before any index write: a lazy
+        plan re-evaluated after the append would see the batch's own
+        entries in the index and reject everything.
+
+        With ``batch_id``, replaying an already-journaled batch returns
+        the recorded survivor set (see module docstring for the crash
+        contract); without it the call is single-shot only."""
+        kept = self.dedup_ids(df, text_col, id_col, batch_id)
+        return (df.join(kept, id_col, "left_semi")
+                .select(*df.columns))
 
     def prune_journal(self, keep_last: int = 8) -> list:
         """Delete journal entries beyond the ``keep_last`` most recent
@@ -150,53 +288,27 @@ class _JournaledIndex:
             pruned.append(d.split("=", 1)[1])
         return pruned
 
-    def _touch(self, path: str) -> None:
-        self._io.touch(path)
-
 
 class FingerprintIndex(_JournaledIndex):
-    # the index columns a probe reads (the id column is never read back)
-    _INDEX_SCHEMA = T.StructType([
-        T.StructField("fingerprint", T.LongType()),
-        T.StructField("bucket", T.IntegerType())])
+    """Persistent EXACT-duplicate index (module docstring):
+    ``dedup_and_update`` returns the batch rows whose normalized text
+    was never seen — neither earlier in this batch (min id survives)
+    nor in any previous batch — and appends the survivors'
+    fingerprints to the index. Journal part: ``fingerprints``
+    ``(fingerprint, id)``."""
 
-    def _bucket(self, col) -> F.Column:
-        return F.pmod(col, F.lit(self.num_buckets)).cast("int")
+    FORMAT = 1
+    _PARAMS = ("num_buckets",)
+    _SURVIVORS = "fingerprints"
+    # a probe reads only the fingerprint, whatever id column the index
+    # was built with
+    _FINGERPRINT = T.StructField("fingerprint", T.LongType())
 
-    def _exists(self) -> bool:
-        return bool(self._io.glob(self._io.join(self.path, "bucket=*")))
+    # a class attribute of its own: perfbench/spans.py wraps it per class
+    dedup_ids = _JournaledIndex.dedup_ids
 
-    def _append_to_index(self, fresh: DataFrame) -> None:
-        # one write task per bucket (the same bound the lake's COW merge
-        # uses): repartition("bucket") alone would spread the tiny
-        # append over spark.sql.shuffle.partitions mostly-empty tasks
-        (fresh
-         .withColumn("bucket", self._bucket(F.col("fingerprint")))
-         .repartition(self.num_buckets, "bucket")
-         .write.mode("append").partitionBy("bucket")
-         .parquet(self.path))
-
-    def dedup_ids(self, df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  batch_id: str | None = None) -> DataFrame:
-        """The accept/reject decision alone: a small materialized frame
-        of the batch's surviving ``id_col`` values, with the same
-        journal / index-append side effects as ``dedup_and_update``.
-        Callers that only need the id set — the CDC pipeline's
-        ingest-time content check semi-joins its batch on exactly this —
-        skip the row-level re-join entirely."""
-        if batch_id is not None:
-            self._check_batch_id(batch_id)
-        if batch_id is not None and self._journal_committed(batch_id):
-            # replay of a committed batch: the journaled decision is
-            # authoritative — finish the index append if the crash
-            # landed between journal commit and append
-            fresh = self.spark.read.parquet(self._journal_dir(batch_id))
-            if not self._io.exists(self._indexed_marker(batch_id)):
-                self._append_to_index(fresh.select("fingerprint", id_col))
-                self._touch(self._indexed_marker(batch_id))
-            return fresh.select(id_col)
-
+    def _decide(self, df: DataFrame, text_col: str, id_col: str,
+                pin: bool) -> dict:
         fp = doc_fingerprint(text_col).alias("fingerprint")
         # ONE heavy pass over the batch (fingerprint scan + in-batch
         # min-id groupBy), materialized eagerly: the index anti-join,
@@ -206,62 +318,27 @@ class FingerprintIndex(_JournaledIndex):
         # values) instead of a distinct/collect pass of its own
         # (guide §1.2: remove repeated passes before tuning anything)
         probe = Observation()
-        firsts = (df.select(F.col(id_col), fp)
-                  .groupBy("fingerprint")
-                  .agg(F.min(id_col).alias(id_col))
-                  .observe(probe, F.collect_set(
-                      self._bucket(F.col("fingerprint"))).alias("b"))
-                  .localCheckpoint(eager=True))
-        if self._exists():
-            # explicit schemas on every read-back: parquet schema
-            # inference is a Spark job per read. Only the fingerprint is
-            # read from the index, whatever id column it was built with
-            seen = (self.spark.read.schema(self._INDEX_SCHEMA)
-                    .parquet(self.path)
-                    .where(F.col("bucket").isin(probe.get["b"]))
-                    .select("fingerprint"))
+        fresh = (df.select(F.col(id_col), fp)
+                 .groupBy("fingerprint")
+                 .agg(F.min(id_col).alias(id_col))
+                 .observe(probe, F.collect_set(
+                     self._bucket(F.col("fingerprint"))).alias("b"))
+                 .localCheckpoint(eager=True))
+        seen = self._slice(self.path, [self._FINGERPRINT], "bucket",
+                           probe.get["b"])
+        if seen is not None:
             # the anti-join decision must be pinned before the index
-            # mutates (a lazy plan re-evaluated after the append would
-            # see the batch's own fingerprints and reject everything) —
-            # pinned by the journal write below when journaled, by a
+            # mutates — by the journal write when journaled, by a
             # localCheckpoint otherwise
-            fresh = firsts.join(seen, "fingerprint", "left_anti")
-        else:
-            fresh = firsts
-        if batch_id is not None:
-            # commit point: the survivor decision becomes durable
-            # before the index mutates — and the journal parquet IS the
-            # materialization (reading it back pins the decision; the
-            # old shape paid a localCheckpoint job AND a journal write
-            # of the same rows)
-            (fresh.write.mode("overwrite")
-             .parquet(self._journal_dir(batch_id)))
-            fresh = (self.spark.read.schema(firsts.schema)
-                     .parquet(self._journal_dir(batch_id)))
-        elif fresh is not firsts:
-            fresh = fresh.localCheckpoint(eager=True)
-        self._append_to_index(fresh)
-        if batch_id is not None:
-            self._touch(self._indexed_marker(batch_id))
-        return fresh.select(id_col)
+            fresh = fresh.join(seen.select("fingerprint"), "fingerprint",
+                               "left_anti")
+            if pin:
+                fresh = fresh.localCheckpoint(eager=True)
+        return {"fingerprints": fresh}
 
-    def dedup_and_update(self, df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         batch_id: str | None = None) -> DataFrame:
-        """Returns the batch rows whose normalized text was never seen
-        — neither earlier in this batch (min id survives) nor in any
-        previous batch — and appends the survivors' fingerprints to the
-        index. The accept/reject decision is MATERIALIZED (eager
-        localCheckpoint inside ``dedup_ids``) before any write: a lazy
-        plan re-evaluated after the append would see the batch's own
-        fingerprints in the index and anti-join itself to empty.
-
-        With ``batch_id``, replaying an already-journaled batch returns
-        the recorded survivor set (see module docstring for the crash
-        contract); without it the call is single-shot only."""
-        kept = self.dedup_ids(df, text_col, id_col, batch_id)
-        return (df.join(kept, id_col, "left_semi")
-                .select(*df.columns))
+    def _append(self, parts: dict, id_col: str) -> None:
+        self._append_bucketed(parts["fingerprints"], self.path, "bucket",
+                              F.col("fingerprint"))
 
 
 class MinHashIndex(_JournaledIndex):
@@ -270,7 +347,7 @@ class MinHashIndex(_JournaledIndex):
     can ask "is this new doc a near-duplicate of anything ingested last
     month?" without rescanning the corpus. Two bucketed parquet parts:
 
-    * ``bands/``  — ``(band, key, doc_id)`` banded MinHash entries of
+    * ``bands/``  — ``(doc_id, band, key)`` banded MinHash entries of
       every accepted doc, partitioned by ``bucket = pmod(key, B)``: a
       new batch's probe reads ONLY the bucket directories its own band
       keys hash into (partition-directory prune, pytest-pinned), k/B of
@@ -289,28 +366,41 @@ class MinHashIndex(_JournaledIndex):
     the same batch (smaller id) or (b) any SURVIVOR of a previous batch
     reaches ``threshold``. In-batch candidates come from the same
     single-shuffle banded blocking as ``minhash_lsh_pairs``
-    (``dedup.minhash_band_keys`` is shared, so index and one-shot
-    blocker are probe-compatible at equal parameters); cross-batch
-    candidates from the pruned band probe; both verify with one native
+    (``dedup.minhash_band_keys`` is ``minhash_band_keys_from_shingles``
+    over ``_shingle_docs``, so index and one-shot blocker are
+    probe-compatible at equal parameters); cross-batch candidates from
+    the pruned band probe; both verify with one native
     ``array_intersect`` — recall follows LSH band math ((1-j^rows)^bands
     miss probability), exactness inside candidates is total.
+    Token-less docs carry no signature: they are returned as survivors
+    but not indexed (run exact dedup first to collapse empty texts).
 
-    Crash safety: same skip-or-replay journal as FingerprintIndex, with
-    a TWO-file commit (bands + docs parquet under the batch's journal
-    dir, then an atomic ``_COMMIT`` marker — two Spark writes can't
-    share one ``_SUCCESS``); replay of a committed batch returns the
-    recorded survivors and completes any interrupted index append
-    (re-appends at worst duplicate index rows — harmless: candidate
-    pairs are distinct-ed before verification)."""
+    Crash safety: the shared skip-or-replay journal (module docstring)
+    with two parts, ``bands`` and ``docs``, under one ``_COMMIT``
+    marker that records both parts' schemas; ``_params.json`` pins
+    ``format`` and every parameter that shapes a band key or a bucket.
+    Re-appends at worst duplicate index rows — harmless: candidate
+    pairs are distinct-ed before verification."""
+
+    FORMAT = 1
+    # probe compatibility: an index built with one parameter set is
+    # garbage to a probe with another (different band keys / shingle
+    # sizes silently miss everything)
+    _PARAMS = ("num_buckets", "num_hashes", "bands", "shingle_n",
+               "threshold", "seed")
+    _SURVIVORS = "docs"
+    _BAND_FIELDS = [T.StructField("band", T.IntegerType()),
+                    T.StructField("key", T.LongType())]
+    _DOC_FIELDS = [T.StructField("sh", T.ArrayType(T.LongType())),
+                   T.StructField("n", T.IntegerType())]
+
+    dedup_ids = _JournaledIndex.dedup_ids  # as in FingerprintIndex
 
     def __init__(self, spark: SparkSession, path: str,
                  num_buckets: int = 64, num_hashes: int = 16,
                  bands: int = 8, shingle_n: int = 3,
                  threshold: float = 0.8, seed: int = 42,
                  max_bucket_size: int | None = None):
-        super().__init__(spark, path, num_buckets)
-        from .dedup import DEFAULT_MAX_BUCKET
-
         self.num_hashes = num_hashes
         self.bands = bands
         self.shingle_n = shingle_n
@@ -318,124 +408,35 @@ class MinHashIndex(_JournaledIndex):
         self.seed = seed
         self.max_bucket_size = (DEFAULT_MAX_BUCKET if max_bucket_size
                                 is None else max_bucket_size)
+        super().__init__(spark, path, num_buckets)
         self._bands_path = self._io.join(path, "bands")
         self._docs_path = self._io.join(path, "docs")
-        self._check_params()
 
-    # probe compatibility: an index built with one parameter set is
-    # garbage to a probe with another (different band keys / shingle
-    # sizes silently miss everything) — pin them at creation
-    _PARAMS = ("num_buckets", "num_hashes", "bands", "shingle_n",
-               "threshold", "seed")
+    def _band_slice(self, buckets, id_field: T.StructField):
+        """Pruned scan of the band index (``_slice``); the id column's
+        type is the probing batch's."""
+        return self._slice(self._bands_path, [id_field, *self._BAND_FIELDS],
+                           "bucket", buckets)
 
-    def _check_params(self) -> None:
-        import json
-
-        p = self._io.join(self.path, "_params.json")
-        mine = {k: getattr(self, k) for k in self._PARAMS}
-        if self._io.exists(p):
-            stored = json.loads(self._io.read_text(p))
-            if stored != mine:
-                raise ValueError(
-                    "MinHashIndex at %s was built with %s — reopening "
-                    "with %s would probe with incompatible band keys"
-                    % (self.path, stored, mine))
-        else:
-            self._io.mkdirs(self.path)
-            self._io.write_atomic(p, json.dumps(mine).encode())
-
-    def _exists(self) -> bool:
-        return bool(self._io.glob(
-            self._io.join(self._bands_path, "bucket=*")))
-
-    def _journal_committed(self, batch_id: str) -> bool:
-        return self._io.exists(
-            self._io.join(self._journal_dir(batch_id), "_COMMIT"))
-
-    def _key_bucket(self, col) -> F.Column:
-        return F.pmod(F.col(col) if isinstance(col, str) else col,
-                      F.lit(self.num_buckets)).cast("int")
-
-    def _doc_bucket(self, col) -> F.Column:
-        return F.pmod(F.xxhash64(F.col(col) if isinstance(col, str)
-                                 else col),
-                      F.lit(self.num_buckets)).cast("int")
-
-    def _band_slice(self, buckets: list) -> DataFrame:
-        """Pruned scan of the band index: only the listed bucket
-        directories (plan-time partition prune, pytest-pinned)."""
-        return (self.spark.read.parquet(self._bands_path)
-                .where(F.col("bucket").isin(list(buckets))))
-
-    def _doc_slice(self, buckets: list) -> DataFrame:
+    def _doc_slice(self, buckets, id_field: T.StructField):
         """Pruned scan of the shingle store (candidate old ids only)."""
-        return (self.spark.read.parquet(self._docs_path)
-                .where(F.col("dbucket").isin(list(buckets))))
+        return self._slice(self._docs_path, [id_field, *self._DOC_FIELDS],
+                           "dbucket", buckets)
 
-    def _append(self, keys: DataFrame, docs: DataFrame,
-                id_col: str) -> None:
-        # zero-shingle docs live in the journal (full survivor set for
-        # replay) but never in the index — an empty shingle set can
-        # never be a candidate, and indexing it would only grow docs/
-        docs = docs.where(F.col("n") > 0)
-
-        def _write_keys():
-            (keys
-             .withColumn("bucket", self._key_bucket("key"))
-             .repartition(self.num_buckets, "bucket")
-             .write.mode("append").partitionBy("bucket")
-             .parquet(self._bands_path))
-
-        def _write_docs():
-            (docs
-             .withColumn("dbucket", self._doc_bucket(id_col))
-             .repartition(self.num_buckets, "dbucket")
-             .write.mode("append").partitionBy("dbucket")
-             .parquet(self._docs_path))
-
-        # the two appends touch disjoint directories and share no
-        # lineage beyond already-materialized inputs — submit them
-        # concurrently so the second write's tasks back-fill the
-        # first's straggler tail (guide §2.6); one write task per
-        # bucket each, same bound as the lake's COW merge
-        _run_concurrently(_write_keys, _write_docs)
-
-    def dedup_ids(self, df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  batch_id: str | None = None) -> DataFrame:
-        """The accept/reject decision alone: a small materialized frame
-        of the batch's surviving ``id_col`` values, with the same
-        journal / index-append side effects as ``dedup_and_update``
-        (see that docstring for the semantics and crash contract)."""
-        from .dedup import (
-            _bucket_pairs,
-            _shingle_docs,
-            _verify_jaccard,
-            minhash_band_keys_from_shingles,
-        )
-
-        if batch_id is not None:
-            self._check_batch_id(batch_id)
-        if batch_id is not None and self._journal_committed(batch_id):
-            jd = self._journal_dir(batch_id)
-            docs = self.spark.read.parquet(self._io.join(jd, "docs"))
-            if not self._io.exists(self._indexed_marker(batch_id)):
-                keys = self.spark.read.parquet(self._io.join(jd, "bands"))
-                self._append(keys, docs, id_col)
-                self._touch(self._indexed_marker(batch_id))
-            return docs.select(id_col)
-
+    def _decide(self, df: DataFrame, text_col: str, id_col: str,
+                pin: bool) -> dict:
+        # every part derives from the pinned shingles and survivor ids,
+        # so ``pin`` needs no extra materialization here
+        #
         # the shingle projection is referenced 3-4x below (in-batch
         # verify, cross-batch verify, journal/append writes) — pin it
         # once instead of re-running the tokenize scan per use. Band
-        # keys DERIVE from the checkpointed frame
-        # (minhash_band_keys_from_shingles — identical keys by
-        # construction), so the signature transform re-runs only over
-        # materialized 8-byte hash arrays and needs no checkpoint of
-        # its own; the old shape paid a second full tokenize+signature
-        # scan per batch just to materialize the keys
+        # keys DERIVE from the checkpointed frame, so the signature
+        # transform re-runs only over materialized 8-byte hash arrays
+        # and needs no checkpoint of its own
         shingled = _shingle_docs(df, text_col, id_col, self.shingle_n) \
             .localCheckpoint(eager=True)
+        id_field = shingled.schema[id_col]
         keys = minhash_band_keys_from_shingles(
             shingled, id_col, self.num_hashes, self.bands, self.seed)
         # (a) in-batch: same banded blocking + exact verify as the
@@ -445,38 +446,42 @@ class MinHashIndex(_JournaledIndex):
                              self.max_bucket_size)
         dropped = (_verify_jaccard(cand, shingled, id_col, self.threshold)
                    .select(F.col("b").alias(id_col)).distinct())
-        if self._exists():
-            # (b) cross-batch: probe ONLY the bucket directories the
-            # batch's band keys hash into, join on (band, key), then
-            # verify against the candidate old docs' shingle sets —
-            # fetched from docs/ with a second partition prune. The
-            # candidate pair set is materialized once (it is small:
-            # band collisions only), so the bounded old-bucket collect
-            # doesn't recompute the signature scan.
+        # (b) cross-batch: probe ONLY the bucket directories the batch's
+        # band keys hash into, join on (band, key), then verify against
+        # the candidate old docs' shingle sets — fetched from docs/ with
+        # a second partition prune. The candidate pair set is
+        # materialized once (it is small: band collisions only), so the
+        # bounded old-bucket collect doesn't recompute the signature
+        # scan. Nothing to probe before the first append.
+        idx = None
+        if self._io.isdir(self._bands_path):
             pbuckets = [r["bucket"] for r in
-                        keys.select(self._key_bucket("key")
+                        keys.select(self._bucket(F.col("key"))
                                     .alias("bucket"))
                         .distinct().collect()]
-            idx = (self._band_slice(pbuckets)
-                   .select("band", "key", F.col(id_col).alias("_old")))
+            idx = self._band_slice(pbuckets, id_field)
+        if idx is not None:
             # NOTE: same-id pairs are kept deliberately — a re-crawl of
             # an already-indexed id must verify against its own indexed
             # text (unchanged re-crawl → jaccard 1 → suppressed, the
             # FingerprintIndex-consistent behavior); excluding a == b
             # here silently re-accepted every re-ingest of a known id
-            cross = (keys.join(idx, ["band", "key"])
+            cross = (keys.join(idx.select("band", "key",
+                                          F.col(id_col).alias("_old")),
+                               ["band", "key"])
                      .select(F.col(id_col).alias("b"),
                              F.col("_old").alias("a"))
                      .distinct()
                      .localCheckpoint(eager=True))
             obuckets = [r["db"] for r in
-                        cross.select(self._doc_bucket("a").alias("db"))
+                        cross.select(self._bucket(F.xxhash64("a"))
+                                     .alias("db"))
                         .distinct().collect()]
-            if obuckets:
-                olds = (self._doc_slice(obuckets)
-                        .select(F.col(id_col).alias("a"),
-                                F.col("sh").alias("sa"),
-                                F.col("n").alias("na")))
+            olds = self._doc_slice(obuckets, id_field)
+            if olds is not None:
+                olds = olds.select(F.col(id_col).alias("a"),
+                                   F.col("sh").alias("sa"),
+                                   F.col("n").alias("na"))
                 news = shingled.select(F.col(id_col).alias("b"),
                                        F.col("sh").alias("sb"),
                                        F.col("n").alias("nb"))
@@ -490,46 +495,25 @@ class MinHashIndex(_JournaledIndex):
         surv_ids = (shingled.select(id_col)
                     .join(dropped, id_col, "left_anti")
                     .localCheckpoint(eager=True))
-        surv_keys = keys.join(surv_ids, id_col, "left_semi")
         # the journal must hold the FULL survivor set — zero-shingle
         # survivors included — or a crash replay (which derives the
         # survivor set from the journaled docs) would drop rows the
         # original run accepted; the n > 0 filter moves to the index
-        # append below (empty shingle sets can never be candidates)
-        surv_docs = shingled.join(surv_ids, id_col, "left_semi")
-        if batch_id is not None:
-            jd = self._journal_dir(batch_id)
-            # independent writes of two already-pinned frames — overlap
-            # them (guide §2.6); the _COMMIT marker still lands only
-            # after BOTH have completed, so the crash contract holds
-            _run_concurrently(
-                lambda: surv_keys.write.mode("overwrite").parquet(
-                    self._io.join(jd, "bands")),
-                lambda: surv_docs.write.mode("overwrite").parquet(
-                    self._io.join(jd, "docs")))
-            # commit point: one atomic marker AFTER both journal writes
-            self._touch(self._io.join(jd, "_COMMIT"))
-            surv_keys = self.spark.read.parquet(
-                self._io.join(jd, "bands"))
-            surv_docs = self.spark.read.parquet(
-                self._io.join(jd, "docs"))
-        self._append(surv_keys, surv_docs, id_col)
-        if batch_id is not None:
-            self._touch(self._indexed_marker(batch_id))
-        return surv_ids
+        # append (empty shingle sets can never be candidates)
+        return {"bands": keys.join(surv_ids, id_col, "left_semi"),
+                "docs": shingled.join(surv_ids, id_col, "left_semi")}
 
-    def dedup_and_update(self, df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         batch_id: str | None = None) -> DataFrame:
-        """Returns the batch rows that are NOT near-duplicates of any
-        earlier same-batch doc or previously accepted doc, and appends
-        the survivors' band entries + shingle sets to the index. The
-        accept/reject decision is materialized (eager localCheckpoint
-        inside ``dedup_ids``) before any write — a lazy plan
-        re-evaluated after the append would see the batch's own band
-        keys and reject everything. Token-less docs carry no signature:
-        they are returned as survivors but not indexed (run exact dedup
-        first to collapse empty texts)."""
-        kept = self.dedup_ids(df, text_col, id_col, batch_id)
-        return (df.join(kept, id_col, "left_semi")
-                .select(*df.columns))
+    def _append(self, parts: dict, id_col: str) -> None:
+        # zero-shingle docs live in the journal (full survivor set for
+        # replay) but never in the index — an empty shingle set can
+        # never be a candidate, and indexing it would only grow docs/
+        docs = parts["docs"].where(F.col("n") > 0)
+        # the two appends touch disjoint directories and share no
+        # lineage beyond already-materialized inputs — submit them
+        # concurrently so the second write's tasks back-fill the
+        # first's straggler tail (guide §2.6)
+        _run_concurrently(
+            lambda: self._append_bucketed(parts["bands"], self._bands_path,
+                                          "bucket", F.col("key")),
+            lambda: self._append_bucketed(docs, self._docs_path, "dbucket",
+                                          F.xxhash64(id_col)))

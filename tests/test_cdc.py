@@ -370,6 +370,33 @@ def test_time_travel_and_expire_snapshots(spark, wal, tmp_path):
     assert pipe2.run() == []
 
 
+def test_expire_snapshots_prunes_dead_attempt_directories(spark, wal,
+                                                          tmp_path):
+    """expire_snapshots deletes every file under data/ that is neither a
+    retained parquet file nor its .crc sidecar: no attempt directory
+    survives as a shell of _SUCCESS and .crc files."""
+    lake_dir = str(tmp_path / "lake")
+    pipe = CDCPipeline(spark, wal, lake_dir, str(tmp_path / "cp"),
+                       num_buckets=4, chunks_per_batch=1)
+    pipe.run(max_batches=2)
+    lake = pipe.table()
+    state = final_pairs(lake.read())
+    lake.expire_snapshots(keep_last=1)
+    live = {e["path"] for files in lake.head()["buckets"].values()
+            for e in files}
+    keep = live | {os.path.join(os.path.dirname(p),
+                                "." + os.path.basename(p) + ".crc")
+                   for p in live}
+    data = os.path.join(lake_dir, "data")
+    for attempt in os.listdir(data):
+        files = {os.path.relpath(os.path.join(d, f), lake_dir)
+                 for d, _, names in os.walk(os.path.join(data, attempt))
+                 for f in names}
+        assert files & live, (attempt, sorted(files))
+        assert files <= keep, (attempt, sorted(files - keep))
+    assert final_pairs(lake.read()) == state
+
+
 def test_concurrent_commit_detected(spark, wal, tmp_path):
     """Best-effort optimistic concurrency: a commit derived from a stale
     HEAD is refused instead of silently clobbering another writer's
@@ -471,8 +498,9 @@ def test_changelog_between_snapshots(spark, wal, tmp_path):
     assert set(ins) == set(state2) - set(state1)
     assert set(dels) == set(state1) - set(state2)
     for u in upd:
-        assert state1[u] != state2[u] or True  # seq may be equal only
-        # if another column changed; seq is the order col so it differs
+        # seq is the event's global id, so an updated key's winner
+        # always changes it
+        assert state1[u] != state2[u]
         assert upd[u] == state2[u]
     # unchanged keys never appear
     changed = set(ins) | set(upd) | set(dels)
@@ -767,6 +795,60 @@ def test_trickle_batch_job_floor(spark, tmp_path):
         spark, "cdc-floor-dedup",
         lambda: idx.dedup_ids(docs.where("seq >= 600"), batch_id="b2"))
     assert jobs <= 7, jobs
+
+
+def _near_dup_docs(spark, lo, hi):
+    """Documents ``lo..hi-1`` of 24 words: every third one repeats the
+    previous document with its last word changed (shingle Jaccard
+    21/23), so it is a near-duplicate but not an exact copy."""
+    def text(i):
+        base = i - 1 if i % 3 == 0 else i
+        ws = ["w%d_%d" % (base, k) for k in range(24)]
+        if base != i:
+            ws[-1] = "changed"
+        return " ".join(ws)
+
+    return spark.createDataFrame([(i, text(i)) for i in range(lo, hi)],
+                                 "doc_id long, text string")
+
+
+@pytest.mark.parametrize("cls", ["FingerprintIndex", "MinHashIndex"])
+def test_index_replay_runs_no_job(spark, tmp_path, cls):
+    """Replaying a journaled dedup_ids whose index append completed
+    reads the journal parts under the schemas its _COMMIT marker
+    records: no Spark job at all (an inferred read-back would cost one
+    schema-inference job), and the recorded survivors."""
+    from embulk_filter_column_spark.operators import incremental
+
+    idx = getattr(incremental, cls)(spark, str(tmp_path / "idx"),
+                                    num_buckets=8)
+    docs = _near_dup_docs(spark, 0, 30)
+    want = sorted(r["doc_id"] for r in
+                  idx.dedup_ids(docs, batch_id="b1").collect())
+    replayed = []
+    jobs = _batch_jobs(
+        spark, "index-replay-" + cls,
+        lambda: replayed.append(idx.dedup_ids(docs, batch_id="b1")))
+    assert jobs == 0, jobs
+    assert sorted(r["doc_id"] for r in replayed[0].collect()) == want
+
+
+def test_minhash_probe_job_count(spark, tmp_path):
+    """A probing MinHashIndex.dedup_ids (the index already holds data)
+    reads every index and journal file under a declared schema: 32
+    Spark jobs here. Inferring the schemas of its two journal read-backs
+    and its band and shingle slices would add one job each (36)."""
+    from embulk_filter_column_spark.operators import MinHashIndex
+
+    idx = MinHashIndex(spark, str(tmp_path / "mh"), num_buckets=8)
+    idx.dedup_ids(_near_dup_docs(spark, 0, 30), batch_id="b1")
+    kept = []
+    jobs = _batch_jobs(
+        spark, "minhash-probe",
+        lambda: kept.append(idx.dedup_ids(_near_dup_docs(spark, 30, 60),
+                                          batch_id="b2")))
+    assert jobs <= 33, jobs
+    assert 0 < kept[0].count() < 30
 
 
 def _data_bytes(lake_dir, snapshot_prefix=None):

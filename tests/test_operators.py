@@ -759,6 +759,8 @@ def test_minhash_index_probe_is_partition_pruned(spark, tmp_path):
     is the evidence)."""
     import os
 
+    from pyspark.sql import types as T
+
     from embulk_filter_column_spark.operators import MinHashIndex
 
     idx = MinHashIndex(spark, str(tmp_path / "mh"), num_buckets=16)
@@ -772,11 +774,62 @@ def test_minhash_index_probe_is_partition_pruned(spark, tmp_path):
                    for d in os.listdir(idx._bands_path)
                    if d.startswith("bucket=")}
     probe = sorted(all_buckets)[:2]
-    for df in (idx._band_slice(probe), idx._doc_slice(probe)):
+    id_field = T.StructField("doc_id", T.LongType())
+    for df in (idx._band_slice(probe, id_field),
+               idx._doc_slice(probe, id_field)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan, plan
         pf = plan.split("PartitionFilters", 1)[1][:300]
         assert "bucket" in pf and " IN " in pf, pf
+
+
+@pytest.mark.parametrize("cls, param, built, reopened", [
+    ("FingerprintIndex", "num_buckets", 8, 16),
+    ("MinHashIndex", "bands", 8, 4),
+])
+def test_index_refuses_incompatible_or_unversioned_reopen(
+        spark, tmp_path, cls, param, built, reopened):
+    """A persisted index pins its format and parameters in _params.json.
+    Reopening with a changed parameter raises and names both sets (a
+    FingerprintIndex reopened with 16 buckets over an 8-bucket index
+    would probe the wrong bucket directories and accept exact copies);
+    a non-empty directory without _params.json raises "unversioned
+    index", and stored params without a format are refused too."""
+    import json
+    import os
+
+    from embulk_filter_column_spark.operators import incremental
+
+    index = getattr(incremental, cls)
+    path = str(tmp_path / "idx")
+
+    def reopen(value):
+        return index(spark, path, **{"num_buckets": 8, param: value})
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "a completely different page about query engines"),
+         (3, "yet another document with its own words in it")],
+        "doc_id long, text string")
+    reopen(built).dedup_ids(docs)
+    with pytest.raises(ValueError, match="incompatible") as err:
+        reopen(reopened)
+    for value in (built, reopened):
+        assert "'%s': %d" % (param, value) in str(err.value)
+    # the same parameters reopen, and every copy is still found
+    assert reopen(built).dedup_ids(docs).count() == 0
+
+    params = os.path.join(path, "_params.json")
+    with open(params) as fh:
+        stored = json.load(fh)
+    os.remove(params)
+    with pytest.raises(ValueError, match="unversioned index"):
+        reopen(built)
+    del stored["format"]
+    with open(params, "w") as fh:
+        json.dump(stored, fh)
+    with pytest.raises(ValueError, match="incompatible"):
+        reopen(built)
 
 
 def test_indexes_on_file_scheme_uri(spark, tmp_path):

@@ -21,6 +21,7 @@ from embulk_filter_column_spark.operators.dedup import (
     _shingle_docs,
     minhash_band_keys,
     minhash_band_keys_from_shingles,
+    minhash_signature,
 )
 
 TEXTS = [
@@ -98,22 +99,40 @@ def test_minhash_sig_fold_equals_per_function_min(docs):
         assert r["got"] == r["ref"], r["doc_id"]
 
 
-def test_band_keys_from_shingles_equal_band_keys_from_text(docs):
-    """The persistent index's band-key derivation from a materialized
-    shingle frame must emit exactly the keys the one-shot blocker emits
-    from raw text — probe compatibility depends on it."""
+def test_band_keys_cover_tokens_found_by_unicode_lowercasing(spark,
+                                                            docs):
+    """Regression: band keys have one derivation, ``_shingle_docs``
+    followed by ``minhash_band_keys_from_shingles``, for the one-shot
+    blocker and the persistent index alike. Doc 9 has tokens only after
+    Unicode lowercasing (U+212A KELVIN SIGN → k, U+0130 → i + U+0307):
+    an ASCII-only token gate in front of the blocker would give it no
+    band keys while the index keys it."""
     params = dict(num_hashes=16, bands=8, seed=42)
+    corpus = docs.unionByName(spark.createDataFrame(
+        [(9, "\u212a\u0130\u212a \u212a\u0130 \u0130\u0130\u212a "
+             "\u212a")], "doc_id long, text string"))
     from_text = {(r["doc_id"], r["band"], r["key"])
                  for r in minhash_band_keys(
-                     docs, "text", "doc_id", shingle_n=3, **params)
+                     corpus, "text", "doc_id", shingle_n=3, **params)
                  .collect()}
-    shingled = _shingle_docs(docs, "text", "doc_id", 3)
+    shingled = _shingle_docs(corpus, "text", "doc_id", 3)
     from_sh = {(r["doc_id"], r["band"], r["key"])
                for r in minhash_band_keys_from_shingles(
                    shingled, "doc_id", **params).collect()}
     assert from_text == from_sh
+    assert len({(b, k) for d, b, k in from_text if d == 9}) == 8
     # shingle-less docs (5, 6, 7) must be absent from both
     assert not {d for d, _, _ in from_text} & {5, 6, 7}
+
+
+def test_minhash_signature_is_null_for_empty_shingles(docs):
+    """The NULL contract of ``minhash_signature``: empty, whitespace-only
+    and NULL text give a NULL signature; every other doc (a short one
+    included, via the whole-text shingle) a full-length one."""
+    got = {r["doc_id"]: r["minhash"]
+           for r in minhash_signature(docs, num_hashes=16).collect()}
+    assert {d for d, sig in got.items() if sig is None} == {5, 6, 7}
+    assert all(len(sig) == 16 for sig in got.values() if sig is not None)
 
 
 def test_lang_id_ascii_gate_bit_identical(spark):
