@@ -5,7 +5,12 @@ lake table:
 
 * ``_lineage``  — batch id → WAL offset range → lake snapshot id
 * ``_metrics``  — per-batch row counts (from ``Observation``s collected
-  during the merge job itself — no extra pass over the data) + wall time
+  during the merge and quarantine jobs — no extra pass over the data),
+  the salting decision + wall time of ``CDCPipeline._apply_batch``
+
+A ``streaming.StreamingCDC`` epoch is batch id epoch + 1 with NULL
+``chunk_lo``/``chunk_hi``. ``dlq_rows`` is NULL without a dead-letter
+queue, ``n_hot_keys`` NULL unless ``n_salts="auto"``.
 
 Both are ordinary parquet directories readable with
 ``spark.read.parquet``. The rows are written with pyarrow directly on
@@ -44,6 +49,9 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("tombstones", T.LongType()),
     T.StructField("buckets_touched", T.LongType()),
     T.StructField("wall_sec", T.DoubleType()),
+    T.StructField("dlq_rows", T.LongType()),
+    T.StructField("salted", T.BooleanType()),
+    T.StructField("n_hot_keys", T.LongType()),
 ])
 
 
@@ -64,8 +72,9 @@ class BatchJournal:
             [row], schema=to_arrow_schema(schema)), buf)
         self._io.write_atomic(f, buf.getvalue().to_pybytes())
 
-    def record(self, result, chunk_lo: int, chunk_hi: int,
-               wall_sec: float) -> None:
+    def record(self, result, chunk_lo: int | None, chunk_hi: int | None,
+               wall_sec: float, dlq_rows: int | None = None,
+               salted: bool = False, n_hot_keys: int | None = None) -> None:
         """One row per batch in each table, named by batch id. An
         applied merge (over)writes its rows, so a replay after a
         rollback shows the new snapshot; a skipped merge (the crash
@@ -79,7 +88,8 @@ class BatchJournal:
             "batch_id": result.batch_id, "rows_in": result.rows_in,
             "winners": result.winners, "tombstones": result.tombstones,
             "buckets_touched": result.buckets_touched,
-            "wall_sec": float(wall_sec)}, overwrite)
+            "wall_sec": float(wall_sec), "dlq_rows": dlq_rows,
+            "salted": salted, "n_hot_keys": n_hot_keys}, overwrite)
 
     # read under the declared schemas: parquet schema inference would
     # cost a Spark job per call

@@ -1,7 +1,9 @@
 """CDC pipeline orchestration: WAL tail → column rules → LWW dedup →
 MERGE → checkpoint (SURVEY.md §3.4 lifecycle).
 
-One batch = one or more WAL chunks. Per batch::
+One batch = one or more WAL chunks. ``run()`` is the WAL/checkpoint loop
+around ``_apply_batch``, the per-batch body (projection through journal)
+that ``streaming.StreamingCDC`` also runs once per epoch::
 
     read chunks [lo, hi)                 # directory-pruned scan
     apply column-rule projection         # native exprs + json pandas UDF
@@ -19,7 +21,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F, types as T
 
 from ..config import FilterConfig
 from ..errors import EngineError
@@ -105,9 +107,9 @@ class CDCPipeline:
         table, the standard quarantine seam of any production ingest.
         The write is per-batch deterministic overwrite, so crash
         replay rewrites the identical quarantine set (exactly-once
-        composes unchanged); quarantined counts land in
-        ``dlq_log``. Without ``dlq_path`` malformed events flow
-        through unchecked (legacy behavior). Costs one extra
+        composes unchanged); quarantined counts land in the batch's
+        ``_metrics`` row (``dlq_rows``). Without ``dlq_path`` malformed
+        events flow through unchecked (legacy behavior). Costs one extra
         column-pruned pass + small write per batch — the price of the
         audit trail; leave unset on trusted inputs."""
         self.spark = spark
@@ -148,18 +150,13 @@ class CDCPipeline:
         self.auto_salt_n = auto_salt_n
         self.hot_key_fraction = hot_key_fraction
         self.hot_key_share = hot_key_share
-        # the previous merge's top_key_events / rows_in; None = unknown
+        # the previous merge's top_key_events / rows_in; None = unknown.
+        # _metrics n_hot_keys: the sampled hot keys on a probed batch,
+        # else 1 when this share engaged salting (the busiest key)
         self._top_key_share: float | None = None
-        # (batch_id, engaged, n_hot) per processed batch — lets operators
-        # and tests see when the skew path kicked in. n_hot counts the
-        # sampled hot keys on a probed batch; on a batch decided by the
-        # previous merge's share it is 1 when engaged (the busiest key)
-        self.salt_log: list = []
         self.dedup_index = dedup_index
         self.dedup_text_col = dedup_text_col
         self.dlq_path = dlq_path
-        # (batch_id, n_quarantined) per processed batch
-        self.dlq_log: list = []
         if config_schedule:
             self.schedule = sorted(
                 ((int(k), self._coerce(v)) for k, v in
@@ -194,19 +191,18 @@ class CDCPipeline:
         # schema-static, so a steady-state stream compiles exactly once
         cache_key = (id(config), df.schema.json())
         cached = getattr(self, "_compile_cache", None)
-        if cached is not None and cached[0] == cache_key:
-            compiled = cached[1]
-            return compiled.apply(df), compiled.output_schema
-        compiled = compile_filter(config, df.schema)
-        self._compile_cache = (cache_key, compiled)
-        out_names = [f.name for f in compiled.output_schema.fields]
-        missing = [c for c in (self.key, *self.order, "op")
-                   if c not in out_names]
-        if missing:
-            raise EngineError(
-                "filter config must preserve the CDC envelope columns; "
-                "missing %s — keep them in `columns` or avoid dropping them"
-                % missing)
+        if cached is None or cached[0] != cache_key:
+            compiled = compile_filter(config, df.schema)
+            out_names = [f.name for f in compiled.output_schema.fields]
+            missing = [c for c in (self.key, *self.order, "op")
+                       if c not in out_names]
+            if missing:
+                raise EngineError(
+                    "filter config must preserve the CDC envelope columns; "
+                    "missing %s — keep them in `columns` or avoid dropping "
+                    "them" % missing)
+            self._compile_cache = cached = (cache_key, compiled)
+        compiled = cached[1]
         return compiled.apply(df), compiled.output_schema
 
     def _dlq_reason(self):
@@ -229,7 +225,7 @@ class CDCPipeline:
         return the mergeable remainder. The quarantine set is a
         deterministic function of the batch, and the write is an
         overwrite of the batch's own directory — replay-idempotent.
-        The diverted count rides an Observation on the write job.
+        The diverted count (an Observation on the write job) is returned.
         Quarantine and remainder both derive from ONE reason-tagged
         projection (VERDICT r5 item 8), so the reason expression tree
         appears once per batch plan instead of twice."""
@@ -241,9 +237,8 @@ class CDCPipeline:
         (bad.observe(obs, F.count(F.lit(1)).alias("n"))
          .write.mode("overwrite")
          .parquet("%s/batch=%d" % (self.dlq_path.rstrip("/"), batch_id)))
-        self.dlq_log.append((batch_id, int(obs.get["n"])))
         return (tagged.where(F.col("_dlq_reason").isNull())
-                .drop("_dlq_reason"))
+                .drop("_dlq_reason"), int(obs.get["n"]))
 
     def dlq(self):
         """All quarantined events across batches (``batch`` partition
@@ -303,38 +298,64 @@ class CDCPipeline:
                 .where(~indexable | F.col("_kept").isNotNull())
                 .select(*projected.columns))
 
-    def _table_schema(self, output_schema):
-        """Lake schema = projected payload without the transient op flag."""
-        from pyspark.sql import types as T
-
-        return T.StructType(
+    def _ensure_lake(self, output_schema, config: FilterConfig):
+        """The merge target, created by the first batch and evolved
+        when ``config`` (the batch's) projects another column list.
+        Lake schema = projected payload without the transient op flag."""
+        desired = T.StructType(
             [f for f in output_schema.fields if f.name != "op"])
-
-    def _ensure_lake(self, output_schema):
-        desired = self._table_schema(output_schema)
-        if self.sink is not None:
-            if not self.sink.exists():
-                self.sink.create(desired)
-                return self.sink
-            current = self.sink.schema()
-            if [f.name for f in current.fields] != \
-                    [f.name for f in desired.fields]:
-                cfg = self._config_for_chunk(self.checkpoint.next_chunk)
-                plan = plan_evolution(current, desired, cfg)
-                self.sink.evolve(plan.new_schema, plan.renames)
+        if self.sink is not None and not self.sink.exists():
+            self.sink.create(desired)
             return self.sink
-        if LakeTable.exists(self.spark, self.lake_path):
-            lake = LakeTable(self.spark, self.lake_path)
-            current = lake.schema()
-            if [f.name for f in current.fields] != \
-                    [f.name for f in desired.fields]:
-                cfg = self._config_for_chunk(self.checkpoint.next_chunk)
-                plan = plan_evolution(current, desired, cfg)
-                lake.evolve(plan.new_schema, plan.renames)
-            return lake
-        return LakeTable.create(
-            self.spark, self.lake_path, desired,
-            key=self.key, order=self.order, num_buckets=self.num_buckets)
+        if self.sink is None and not LakeTable.exists(self.spark,
+                                                      self.lake_path):
+            return LakeTable.create(
+                self.spark, self.lake_path, desired, key=self.key,
+                order=self.order, num_buckets=self.num_buckets)
+        lake = self.table()
+        current = lake.schema()
+        if [f.name for f in current.fields] != \
+                [f.name for f in desired.fields]:
+            plan = plan_evolution(current, desired, config)
+            lake.evolve(plan.new_schema, plan.renames)
+        return lake
+
+    def _apply_batch(self, events, batch_id: int,
+                     chunk_lo: int | None = None,
+                     chunk_hi: int | None = None):
+        """One batch, from the read events to its journal rows. A
+        ``run()`` batch's WAL offsets ``chunk_lo``/``chunk_hi`` pick its
+        config; a streaming epoch has none and uses the first config."""
+        t0 = time.monotonic()
+        config = self._config_for_chunk(chunk_lo or 0)
+        use_salts, n_hot = self.n_salts, None
+        if self.auto_salt:
+            n_hot = self._n_hot_keys(events)
+            use_salts = self.auto_salt_n if n_hot else None
+        projected, out_schema = self._project(events, config)
+        dlq_rows = None
+        if self.dlq_path is not None:
+            projected, dlq_rows = self._quarantine(projected, batch_id)
+        if self.dedup_index is not None:
+            projected = self._content_dedup(projected, batch_id)
+        lake = self._ensure_lake(out_schema, config)
+        merge_kwargs = {"n_salts": use_salts}
+        if self.merge_mode != "cow":
+            # the default stays positional-free so custom sinks
+            # (IcebergSink MERGE INTO) need not grow a mode knob
+            merge_kwargs["mode"] = self.merge_mode
+        result = lake.merge(projected, batch_id, **merge_kwargs)
+        top = getattr(result, "top_key_events", None)
+        rows_in = getattr(result, "rows_in", 0)
+        self._top_key_share = (top / rows_in if top is not None
+                               and rows_in else None)
+        if (self.compact_after_deltas and not result.skipped
+                and hasattr(lake, "compact")):
+            lake.compact(min_deltas=self.compact_after_deltas)
+        self.journal.record(result, chunk_lo, chunk_hi,
+                            time.monotonic() - t0, dlq_rows=dlq_rows,
+                            salted=bool(use_salts), n_hot_keys=n_hot)
+        return result
 
     def run(self, max_batches: int | None = None) -> list:
         """Process available WAL chunks from the checkpointed offset.
@@ -348,37 +369,9 @@ class CDCPipeline:
             lo = self.checkpoint.next_chunk
             hi = min(lo + self.chunks_per_batch, end)
             batch_id = self.checkpoint.batch_id + 1
-            t0 = time.monotonic()
-
-            config = self._config_for_chunk(lo)
-            events = self.reader.read_chunks(lo, hi)
-            use_salts = self.n_salts
-            if self.auto_salt:
-                n_hot = self._n_hot_keys(events)
-                use_salts = self.auto_salt_n if n_hot else None
-                self.salt_log.append((batch_id, bool(n_hot), n_hot))
-            projected, out_schema = self._project(events, config)
-            if self.dlq_path is not None:
-                projected = self._quarantine(projected, batch_id)
-            if self.dedup_index is not None:
-                projected = self._content_dedup(projected, batch_id)
-            lake = self._ensure_lake(out_schema)
-            merge_kwargs = {"n_salts": use_salts}
-            if self.merge_mode != "cow":
-                # the default stays positional-free so custom sinks
-                # (IcebergSink MERGE INTO) need not grow a mode knob
-                merge_kwargs["mode"] = self.merge_mode
-            result = lake.merge(projected, batch_id, **merge_kwargs)
-            top = getattr(result, "top_key_events", None)
-            rows_in = getattr(result, "rows_in", 0)
-            self._top_key_share = (top / rows_in if top is not None
-                                   and rows_in else None)
-            if (self.compact_after_deltas and not result.skipped
-                    and hasattr(lake, "compact")):
-                lake.compact(min_deltas=self.compact_after_deltas)
-            self.journal.record(result, lo, hi, time.monotonic() - t0)
+            results.append(self._apply_batch(
+                self.reader.read_chunks(lo, hi), batch_id, lo, hi))
             self.checkpoint.commit(hi, batch_id)
-            results.append(result)
         return results
 
     def table(self):

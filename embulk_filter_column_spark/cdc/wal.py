@@ -58,3 +58,15 @@ class WalReader:
                 .option("basePath", self.path)
                 .parquet(*dirs)
                 .drop("chunk"))
+
+    def stream(self, max_files_per_trigger: int | None = None) -> DataFrame:
+        """Every ``chunk=<n>`` directory as a Structured-Streaming file
+        source, under the schema of the chunks present now."""
+        reader = (self.spark.readStream
+                  .schema(self.spark.read.parquet(self.path).schema)
+                  .option("basePath", self.path))
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger",
+                                   str(max_files_per_trigger))
+        return reader.parquet(self._io.join(self.path, "chunk=*")) \
+                     .drop("chunk")

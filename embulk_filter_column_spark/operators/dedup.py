@@ -44,14 +44,15 @@ def _has_tokens(text_col: str):
     the projection and evaluates the whole signature twice (measured 3×
     on the minhash query).
 
-    Normalization replaces every non-[a-z0-9 whitespace] run with a
-    space and tokenizes on whitespace, so a token exists iff the text
-    contains ANY alphanumeric character — one rlike, exact. (The
-    previous ``trim(normalized) != ''`` form leaked tab-only docs into
-    the blocking — ``trim`` strips spaces, not tabs — where their
-    empty shingle sets shared one degenerate band key, exactly what
-    this filter exists to prevent.)"""
-    return F.col(text_col).rlike("[a-zA-Z0-9]")
+    Normalization lowercases, replaces every non-[a-z0-9 whitespace]
+    run with a space and tokenizes on whitespace, so a token exists iff
+    the LOWERCASED text has an [a-z0-9] character — one rlike, exact
+    (lowercasing maps U+212A and U+0130 into ASCII). (The previous
+    ``trim(normalized) != ''`` form leaked tab-only docs into the
+    blocking — ``trim`` strips spaces, not tabs — where their empty
+    shingle sets shared one degenerate band key, exactly what this
+    filter exists to prevent.)"""
+    return F.lower(F.col(text_col)).rlike("[a-z0-9]")
 
 
 def _widen(df: DataFrame) -> DataFrame:

@@ -1,10 +1,13 @@
 """Structured-Streaming mode of the CDC pipeline (SURVEY.md §2.3).
 
-``readStream`` tails the WAL directory as a file stream;
-``foreachBatch`` funnels every micro-batch through the same idempotent
-LakeTable.merge as the batch pipeline, so exactly-once composes from
-(streaming checkpoint offsets) × (batch-id-idempotent sink commits) —
-the standard Spark recipe for transactional foreachBatch sinks.
+``readStream`` tails the WAL directory as a file stream
+(``WalReader.stream``); ``foreachBatch`` runs every micro-batch through
+the batch pipeline's own per-batch body (``CDCPipeline._apply_batch``)
+under batch id epoch + 1, so exactly-once composes from (streaming
+checkpoint offsets) × (batch-id-idempotent sink commits) — the standard
+Spark recipe for transactional foreachBatch sinks. Each epoch writes the
+same ``_lineage`` and ``_metrics`` rows as a batch run, with NULL WAL
+offsets; a replayed epoch keeps the rows of its first run.
 
 Last-writer-wins MERGE is order-insensitive (tombstones retained), so
 late data folds in correctly without watermarking; a watermark is only
@@ -17,8 +20,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import FilterConfig
-from ..cdc.lake import LakeTable
 from ..cdc.pipeline import CDCPipeline
 
 
@@ -49,57 +50,34 @@ class StreamingCDC:
         the streaming path: unmergeable micro-batch events (NULL key,
         unknown op, NULL order column) divert to
         ``dlq_path/batch=<epoch+1>/`` — deterministic per-epoch
-        overwrite, replay-idempotent; read via ``dlq()``."""
-        self.spark = spark
-        self.merge_mode = merge_mode
-        self.wal_path = wal_path
-        self.lake_path = lake_path
+        overwrite, replay-idempotent; read via ``dlq()``.
+
+        Every epoch journals one ``_lineage`` and one ``_metrics`` row
+        under the lake path (cdc.metrics), keyed by batch id epoch + 1,
+        with NULL ``chunk_lo``/``chunk_hi``."""
         self.checkpoint_path = checkpoint_path
-        self.config = filter_config if isinstance(filter_config, FilterConfig) \
-            else FilterConfig.from_dict(filter_config or {})
-        self.key = key
-        self.order = tuple(order)
-        self.num_buckets = num_buckets
         self.max_files_per_trigger = max_files_per_trigger
-        # one pipeline helper for the life of the stream — per-epoch
+        # one pipeline for the life of the stream — per-epoch
         # construction would re-derive checkpoint/journal state and
         # re-compile the rule tree every micro-batch (VERDICT r1 item 6)
-        self._helper = CDCPipeline(
-            self.spark, self.wal_path, self.lake_path,
-            os.path.join(self.checkpoint_path, "_sink_cp"),
-            filter_config=self.config, key=self.key, order=self.order,
-            num_buckets=self.num_buckets,
+        self._pipeline = CDCPipeline(
+            spark, wal_path, lake_path,
+            os.path.join(checkpoint_path, "_sink_cp"),
+            filter_config=filter_config, key=key, order=order,
+            num_buckets=num_buckets, merge_mode=merge_mode,
             dedup_index=dedup_index, dedup_text_col=dedup_text_col,
             dlq_path=dlq_path)
 
-    def _stream(self) -> DataFrame:
-        static = self.spark.read.parquet(self.wal_path)
-        reader = (self.spark.readStream
-                  .schema(static.schema)
-                  .option("basePath", self.wal_path))
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger",
-                                   str(self.max_files_per_trigger))
-        return reader.parquet(os.path.join(self.wal_path, "chunk=*")) \
-                     .drop("chunk")
-
     def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # _project caches the compiled rule tree per (config, schema), so
-        # a steady-state stream compiles once, not once per epoch
-        projected, out_schema = self._helper._project(batch_df, self.config)
-        if self._helper.dlq_path is not None:
-            projected = self._helper._quarantine(projected, epoch_id + 1)
-        if self._helper.dedup_index is not None:
-            projected = self._helper._content_dedup(projected, epoch_id + 1)
-        lake = self._helper._ensure_lake(out_schema)
         # epoch ids are 0-based and replayed on recovery; the lake skips
         # batch ids it has already committed
-        lake.merge(projected, epoch_id + 1, mode=self.merge_mode)
+        self._pipeline._apply_batch(batch_df, epoch_id + 1)
 
     def run_available_now(self) -> None:
         """Drain everything currently in the WAL, then stop (the
         streaming analog of CDCPipeline.run())."""
-        q = (self._stream().writeStream
+        q = (self._pipeline.reader.stream(self.max_files_per_trigger)
+             .writeStream
              .foreachBatch(self._apply)
              .option("checkpointLocation", self.checkpoint_path)
              .trigger(availableNow=True)
@@ -108,7 +86,7 @@ class StreamingCDC:
 
     def dlq(self):
         """Quarantined events across all processed epochs."""
-        return self._helper.dlq()
+        return self._pipeline.dlq()
 
-    def table(self) -> LakeTable:
-        return LakeTable(self.spark, self.lake_path)
+    def table(self):
+        return self._pipeline.table()

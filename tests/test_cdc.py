@@ -148,11 +148,15 @@ def test_projection_inside_pipeline(spark, wal, tmp_path):
 
 
 def test_envelope_must_survive_projection(spark, wal, tmp_path):
-    with pytest.raises(EngineError, match="envelope"):
-        CDCPipeline(spark, wal, str(tmp_path / "lake"),
-                    str(tmp_path / "cp"),
-                    filter_config={"columns": [{"name": "url"},
-                                               {"name": "op"}]}).run()
+    pipe = CDCPipeline(spark, wal, str(tmp_path / "lake"),
+                       str(tmp_path / "cp"),
+                       filter_config={"columns": [{"name": "url"},
+                                                  {"name": "op"}]})
+    # a retry on the same pipeline reuses the compiled rule tree and
+    # must still refuse it
+    for _ in range(2):
+        with pytest.raises(EngineError, match="envelope"):
+            pipe.run()
 
 
 def test_schema_evolution_mid_stream(spark, wal, tmp_path):
@@ -638,8 +642,9 @@ def test_auto_salting_engages_on_viral_key(spark, tmp_path):
         hot_key_fraction=0.5)
     pipe.run()
 
-    assert pipe.salt_log, "auto mode must record a decision per batch"
-    assert all(engaged for _, engaged, _ in pipe.salt_log), pipe.salt_log
+    salted = [r["salted"] for r in pipe.journal.metrics().collect()]
+    assert salted, "auto mode must record a decision per batch"
+    assert all(salted), salted
 
     want = oracle_state(spark, wal_dir)
     got = final_pairs(pipe.table().read())
@@ -671,9 +676,9 @@ def test_auto_salting_stays_off_on_uniform_keys(spark, tmp_path):
         num_buckets=8, chunks_per_batch=2, n_salts="auto",
         hot_key_fraction=0.5)
     pipe.run()
-    assert pipe.salt_log
-    assert not any(engaged for _, engaged, _ in pipe.salt_log), \
-        pipe.salt_log
+    salted = [r["salted"] for r in pipe.journal.metrics().collect()]
+    assert salted
+    assert not any(salted), salted
 
 
 def test_hot_keys_needs_a_measurable_sample(spark):
@@ -723,7 +728,9 @@ def test_auto_salting_lags_one_batch(spark, tmp_path):
         spark, wal_dir, str(tmp_path / "lake"), str(tmp_path / "cp"),
         num_buckets=8, n_salts="auto", hot_key_fraction=0.5)
     results = pipe.run()
-    assert pipe.salt_log == [(1, True, 1), (2, True, 1), (3, False, 0)]
+    assert sorted((r["batch_id"], r["salted"], r["n_hot_keys"])
+                  for r in pipe.journal.metrics().collect()) == \
+        [(1, True, 1), (2, True, 1), (3, False, 0)]
     assert [(r.rows_in, r.top_key_events) for r in results] == \
         [(1000, 600), (1000, 2), (1000, 2)]
     want = oracle_state(spark, wal_dir)
@@ -786,7 +793,8 @@ def test_trickle_batch_job_floor(spark, tmp_path):
     jobs = _batch_jobs(spark, "cdc-floor-batch",
                        lambda: pipe.run(max_batches=1))
     assert jobs <= 14, jobs
-    assert [engaged for _, engaged, _ in pipe.salt_log] == [False] * 3
+    assert [r["salted"] for r in pipe.journal.metrics().collect()] == \
+        [False] * 3
 
     idx = FingerprintIndex(spark, str(tmp_path / "idx2"), num_buckets=8)
     docs = events.select(F.col("seq").alias("doc_id"), "text")
@@ -1230,6 +1238,11 @@ def test_content_dedup_near_dup_index(spark, tmp_path):
     assert urls == {"http://orig", "http://other"}
 
 
+def _dlq_rows(pipe):
+    return sorted((r["batch_id"], r["dlq_rows"])
+                  for r in pipe.journal.metrics().collect())
+
+
 def test_dlq_quarantines_malformed_events(spark, tmp_path):
     """NULL-key / bad-op / NULL-order events land in the dead-letter
     queue with reasons instead of corrupting the lake; good events
@@ -1261,7 +1274,7 @@ def test_dlq_quarantines_malformed_events(spark, tmp_path):
     assert state == {"http://b"}          # a deleted; bad rows diverted
     q = {r["seq"]: r["_dlq_reason"] for r in pipe.dlq().collect()}
     assert q == {1: "bad_op", 2: "null_key", 3: "null_order_col"}
-    assert pipe.dlq_log == [(1, 2), (2, 1)]
+    assert _dlq_rows(pipe) == [(1, 2), (2, 1)]
 
     # replay with a fresh checkpoint/lake, same DLQ: identical content
     pipe2 = CDCPipeline(spark, wal_dir, str(tmp_path / "lake2"),
@@ -1270,6 +1283,7 @@ def test_dlq_quarantines_malformed_events(spark, tmp_path):
     pipe2.run()
     q2 = {r["seq"]: r["_dlq_reason"] for r in pipe2.dlq().collect()}
     assert q2 == q
+    assert _dlq_rows(pipe2) == [(1, 2), (2, 1)]
 
 
 def test_dlq_rejects_lowercase_op(spark, tmp_path):

@@ -240,6 +240,22 @@ def test_simhash_near_dup_pairs(spark, docs):
     assert all(4 not in p and 5 not in p for p in pairs)
 
 
+def test_simhash_pairs_docs_with_tokens_only_after_lowercasing(spark):
+    """The token pre-filter matches the tokenizer: docs 1 and 2 have
+    tokens only after Unicode lowercasing (U+212A KELVIN SIGN → k,
+    U+0130 → i + U+0307), and their identical copies must pair like
+    the ASCII copies 3 and 4."""
+    from embulk_filter_column_spark.operators import simhash_near_dup_pairs
+
+    odd = "\u212a\u0130\u212a \u212a\u0130 \u0130\u0130\u212a \u212a"
+    df = spark.createDataFrame(
+        [(1, odd), (2, odd), (3, "kik ki iik k"), (4, "kik ki iik k")],
+        "doc_id long, text string")
+    pairs = {(r["a"], r["b"])
+             for r in simhash_near_dup_pairs(df, max_hamming=3).collect()}
+    assert pairs == {(1, 2), (3, 4)}
+
+
 def test_verified_lsh_pairs_equal_exact_join(spark, docs):
     """minhash_lsh_pairs / simhash_jaccard_pairs = blocking + exact
     verification, so on a corpus where blocking recall is total their

@@ -3,6 +3,7 @@ MERGE; availableNow drain equals the batch pipeline's final state."""
 
 import pytest
 
+from embulk_filter_column_spark.cdc.metrics import BatchJournal
 from embulk_filter_column_spark.sources import web_change_events, write_wal
 from embulk_filter_column_spark.streaming import StreamingCDC
 
@@ -39,6 +40,12 @@ def test_streaming_drain_matches_oracle(spark, wal, tmp_path):
     assert job.table().head()["snapshot_id"] == snap
 
 
+def _journal_rows(journal, batch_id):
+    """The (_metrics, _lineage) rows of ``batch_id``, as dicts."""
+    return tuple(t.where("batch_id = %d" % batch_id).collect()[0].asDict()
+                 for t in (journal.metrics(), journal.lineage()))
+
+
 def test_crash_after_commit_before_checkpoint(spark, wal, tmp_path):
     """Failure injection (VERDICT r1 item 8): the worst-case window is
     after the lake commit but before the streaming checkpoint advances.
@@ -63,6 +70,9 @@ def test_crash_after_commit_before_checkpoint(spark, wal, tmp_path):
     assert crashed
     committed_at_crash = job.table().committed_batch_id
     assert committed_at_crash == crashed["epoch"] + 1  # commit DID land
+    # the crashed epoch journaled before the crash
+    journal = BatchJournal(spark, lake_dir)
+    first_run = _journal_rows(journal, committed_at_crash)
 
     # restart: Spark replays the crashed epoch; the lake skips it
     job2 = StreamingCDC(spark, wal, lake_dir, cp_dir, num_buckets=8,
@@ -75,6 +85,15 @@ def test_crash_after_commit_before_checkpoint(spark, wal, tmp_path):
     # one snapshot per unique batch id: the replayed epoch added none
     assert head["snapshot_id"] == head["batch_id"]
     assert head["batch_id"] > committed_at_crash
+    # one _metrics and one _lineage row per batch id; the replayed epoch
+    # (a skipped merge) kept the rows of its first run
+    for table in (journal.metrics(), journal.lineage()):
+        assert sorted(r["batch_id"] for r in table.collect()) == \
+            list(range(1, head["batch_id"] + 1))
+    assert _journal_rows(journal, committed_at_crash) == first_run
+    assert not first_run[1]["skipped"]
+    assert all(r["chunk_lo"] is None and r["chunk_hi"] is None
+               for r in journal.lineage().collect())
 
 
 def test_stateful_sessionize_across_microbatches(spark, tmp_path):
@@ -257,7 +276,8 @@ def test_streaming_dlq(spark, tmp_path):
               "text string")
     wal_dir = str(tmp_path / "wal")
     write_wal(df, wal_dir, chunk_rows=3)
-    job = StreamingCDC(spark, wal_dir, str(tmp_path / "lake"),
+    lake_dir = str(tmp_path / "lake")
+    job = StreamingCDC(spark, wal_dir, lake_dir,
                        str(tmp_path / "cp"), num_buckets=4,
                        dlq_path=str(tmp_path / "dlq"))
     job.run_available_now()
@@ -265,3 +285,5 @@ def test_streaming_dlq(spark, tmp_path):
         == {"http://a"}
     assert {r["seq"]: r["_dlq_reason"] for r in job.dlq().collect()} \
         == {1: "bad_op", 2: "null_key"}
+    assert sum(r["dlq_rows"] for r in
+               BatchJournal(spark, lake_dir).metrics().collect()) == 2
