@@ -695,23 +695,37 @@ def q_similarity_lsh(spark, sf_dir):
     those 9 planted ids — enumerable in SQL. A bucketing or rerank bug
     drops planted rows or promotes organic ones (all cosine < 1)."""
     _utc(spark)
-    return lsh_topk(_embeddings_with_parallel_plants(spark, sf_dir),
+    return lsh_topk(_embeddings_with_parallel_plants(spark, sf_dir)[0],
                     _query_vec(spark, sf_dir), k=10)
 
 
-def _embeddings_with_parallel_plants(spark, sf_dir):
-    """embeddings ∪ 9 positively-scaled copies of vector 0 — same
-    direction ⇒ same LSH bucket / same IVF cell, cosine exactly 1.0."""
-    e = (_load(spark, sf_dir, "embeddings")
-         .select("vec_id",
-                 F.col("embedding").cast("array<double>").alias("embedding")))
-    planted = (e.where(F.col("vec_id") == 0)
-               .select(F.explode(F.sequence(F.lit(1), F.lit(9))).alias("i"),
+def _embeddings(spark, sf_dir):
+    """The embeddings table as (vec_id, embedding array<double>)."""
+    return (_load(spark, sf_dir, "embeddings")
+            .select("vec_id",
+                    F.col("embedding").cast("array<double>")
+                    .alias("embedding")))
+
+
+def _embeddings_with_parallel_plants(spark, sf_dir, n_queries=1):
+    """(corpus, queries): the query rows are vectors ``0 .. n_queries-1``
+    as (query_id, embedding); the corpus is embeddings ∪ 9
+    positively-scaled copies of each query vector (copy ``i`` of query
+    ``q`` gets id ``2000000 + q*100 + i``) — same direction ⇒ same LSH
+    bucket / same IVF cell, cosine exactly 1.0. Both come from one
+    table read."""
+    e = _embeddings(spark, sf_dir)
+    queries = (e.where(F.col("vec_id") < n_queries)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    planted = (queries
+               .select("query_id",
+                       F.explode(F.sequence(F.lit(1), F.lit(9))).alias("i"),
                        "embedding")
-               .select((F.col("i") + 2000000).alias("vec_id"),
+               .select((F.lit(2000000) + F.col("query_id") * 100
+                        + F.col("i")).alias("vec_id"),
                        F.transform("embedding", lambda x: x * 1.001)
                         .alias("embedding")))
-    return e.unionByName(planted)
+    return e.unionByName(planted), queries
 
 
 def q_similarity_ivf(spark, sf_dir):
@@ -729,7 +743,7 @@ def q_similarity_ivf(spark, sf_dir):
     )
 
     _utc(spark)
-    eu = _embeddings_with_parallel_plants(spark, sf_dir)
+    eu, _ = _embeddings_with_parallel_plants(spark, sf_dir)
     centroids = train_ivf_centroids(eu, n_centroids=16)
     base = tempfile.mkdtemp(prefix="spark_graft_ivf_")
     write_ivf_table(eu, f"{base}/ivf", centroids)
@@ -748,10 +762,7 @@ def q_similarity_knn_join(spark, sf_dir):
     from embulk_filter_column_spark.operators.similarity import knn_join
 
     _utc(spark)
-    emb = (_load(spark, sf_dir, "embeddings")
-           .select("vec_id",
-                   F.col("embedding").cast("array<double>")
-                   .alias("embedding")))
+    emb = _embeddings(spark, sf_dir)
     queries = (emb.where(F.col("vec_id") < 3)
                .select(F.col("vec_id").alias("query_id"), "embedding"))
     return knn_join(emb, queries, k=5)
@@ -787,26 +798,11 @@ def q_similarity_ivf_knn(spark, sf_dir):
     )
 
     _utc(spark)
-    e = (_load(spark, sf_dir, "embeddings")
-         .select("vec_id",
-                 F.col("embedding").cast("array<double>")
-                 .alias("embedding")))
-    plants = (e.where(F.col("vec_id") < 3)
-              .select(F.col("vec_id").alias("q"), "embedding")
-              .select("q",
-                      F.explode(F.sequence(F.lit(1), F.lit(9)))
-                       .alias("i"),
-                      "embedding")
-              .select((F.lit(2000000) + F.col("q") * 100 + F.col("i"))
-                      .alias("vec_id"),
-                      F.transform("embedding", lambda x: x * 1.001)
-                       .alias("embedding")))
-    corpus = e.unionByName(plants)
+    corpus, queries = _embeddings_with_parallel_plants(spark, sf_dir,
+                                                       n_queries=3)
     centroids = train_ivf_centroids(corpus, n_centroids=16)
     base = tempfile.mkdtemp(prefix="spark_graft_ivfknn_")
     write_ivf_table(corpus, f"{base}/ivf", centroids)
-    queries = (e.where(F.col("vec_id") < 3)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
     return ivf_knn_join(spark, f"{base}/ivf", queries, centroids,
                         k=10, nprobe=2)
 
@@ -828,26 +824,11 @@ def q_similarity_recall(spark, sf_dir):
     )
 
     _utc(spark)
-    e = (_load(spark, sf_dir, "embeddings")
-         .select("vec_id",
-                 F.col("embedding").cast("array<double>")
-                 .alias("embedding")))
-    plants = (e.where(F.col("vec_id") < 3)
-              .select(F.col("vec_id").alias("q"), "embedding")
-              .select("q",
-                      F.explode(F.sequence(F.lit(1), F.lit(9)))
-                       .alias("i"),
-                      "embedding")
-              .select((F.lit(2000000) + F.col("q") * 100 + F.col("i"))
-                      .alias("vec_id"),
-                      F.transform("embedding", lambda x: x * 1.001)
-                       .alias("embedding")))
-    corpus = e.unionByName(plants)
+    corpus, queries = _embeddings_with_parallel_plants(spark, sf_dir,
+                                                       n_queries=3)
     centroids = train_ivf_centroids(corpus, n_centroids=16)
     base = tempfile.mkdtemp(prefix="spark_graft_recall_")
     write_ivf_table(corpus, f"{base}/ivf", centroids)
-    queries = (e.where(F.col("vec_id") < 3)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
     exact = knn_join(corpus, queries, k=10)
     approx = ivf_knn_join(spark, f"{base}/ivf", queries, centroids,
                           k=10, nprobe=2)

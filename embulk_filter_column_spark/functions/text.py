@@ -201,10 +201,10 @@ def word_ngram_hashes(col, n: int = 3) -> Column:
 def word_ngram_hashes_sized(col, main_n: int, extra_sizes) -> Column:
     """Struct of (``sh``: distinct shingle hashes at ``main_n`` AND
     every size in ``extra_sizes``, ``n``: the main-size distinct count)
-    from ONE tokenization per row. ``sh`` equals
-    ``array_distinct(word_ngram_hashes(main_n) ++
-    word_ngram_hashes_multi(extra_sizes))`` and ``n`` equals
-    ``size(word_ngram_hashes(main_n))`` — the exact pair
+    from ONE tokenization per row. ``sh`` equals the ``array_distinct``
+    of the concatenated ``word_ngram_hashes(main_n)`` and
+    ``word_ngram_hashes(s)`` for each ``s`` in ``extra_sizes``, and
+    ``n`` equals ``size(word_ngram_hashes(main_n))`` — the exact pair
     ``decontaminate``'s short-eval path needs, previously computed with
     two tokenize passes over the training corpus."""
     extra = sorted({int(s) for s in extra_sizes})

@@ -596,16 +596,122 @@ def test_knn_join_exact_vs_per_query_bruteforce(spark):
         assert got_q == want, (qr["query_id"], got_q, want)
 
 
-def test_knn_join_query_bound(spark):
-    from embulk_filter_column_spark.operators.similarity import knn_join
+def _batch_knn_entry(spark, tmp_path, entry, corpus):
+    """``run(queries, **kw)`` for one batch entry point over ``corpus``:
+    ``knn_join`` directly, ``ivf_knn_join`` over a ``write_ivf_table``
+    layout of it."""
+    from embulk_filter_column_spark.operators.similarity import (
+        ivf_knn_join,
+        knn_join,
+        train_ivf_centroids,
+        write_ivf_table,
+    )
 
-    df = (spark.range(20)
-          .select(F.col("id").alias("vec_id"),
-                  F.transform(F.sequence(F.lit(1), F.lit(4)),
-                              lambda i: i * 1.0).alias("embedding")))
-    q = df.select(F.col("vec_id").alias("query_id"), "embedding")
+    if entry == "knn_join":
+        return lambda q, **kw: knn_join(corpus, q, **kw)
+    centroids = train_ivf_centroids(corpus, n_centroids=4)
+    path = str(tmp_path / "ivf_table")
+    write_ivf_table(corpus, path, centroids)
+    return lambda q, **kw: ivf_knn_join(spark, path, q, centroids, **kw)
+
+
+@pytest.mark.parametrize("entry", ["knn_join", "ivf_knn_join"])
+def test_knn_join_query_bound(spark, tmp_path, entry):
+    """Both batch entry points share the query-side contract: the row
+    and byte bounds raise, an empty query side returns an empty frame
+    typed like the (string) id inputs, and the chunk warning points at
+    the caller's line."""
+    import warnings
+
+    corpus = (spark.range(20)
+              .select(F.concat(F.lit("d"), F.col("id").cast("string"))
+                      .alias("vec_id"),
+                      F.transform(F.sequence(F.lit(1), F.lit(4)),
+                                  lambda i: F.sin(i * (F.col("id") + 1)
+                                                  * 0.37))
+                      .alias("embedding")))
+    run = _batch_knn_entry(spark, tmp_path, entry, corpus)
+    q = corpus.select(F.concat(F.lit("q"), "vec_id").alias("query_id"),
+                      "embedding")
     with pytest.raises(ValueError, match="max_queries"):
-        knn_join(df, q, k=2, max_queries=5)
+        run(q, k=2, max_queries=5)
+    # byte bound: 20 queries × 4 dims × 8 B = 640 B > 100 B cap
+    with pytest.raises(ValueError, match="max_query_bytes"):
+        run(q, k=2, max_query_bytes=100)
+    empty = run(q.where(F.lit(False)), k=2)
+    assert empty.count() == 0
+    assert empty.dtypes == [("query_id", "string"), ("vec_id", "string"),
+                            ("cosine", "double")]
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        run(q, k=2, chunk_bytes=64)   # 2 queries per chunk → 10 scans
+    rec = [r for r in rec if "query matrix spans 10 chunks" in
+           str(r.message)]
+    assert len(rec) == 1 and rec[0].category is UserWarning
+    assert rec[0].filename == __file__, rec[0].filename
+
+
+@pytest.mark.parametrize("entry", ["knn_join", "ivf_knn_join"])
+def test_batch_knn_rejects_null_query_vectors(spark, tmp_path, entry):
+    """The query side is caller input: NULL or ragged query vectors
+    raise a ValueError naming the entry point and the query ids, not a
+    numpy shape error — with one bad query among several, and with an
+    all-NULL query side."""
+    corpus = (spark.range(40)
+              .select(F.col("id").alias("vec_id"),
+                      F.transform(F.sequence(F.lit(1), F.lit(4)),
+                                  lambda i: F.cos(i * (F.col("id") + 1)
+                                                  * 0.41))
+                      .alias("embedding")))
+    run = _batch_knn_entry(spark, tmp_path, entry, corpus)
+    schema = "query_id long, embedding array<double>"
+    some = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, None), (3, [0.0, 1.0, 0.0, 0.0]),
+         (4, [1.0, 2.0])], schema)
+    with pytest.raises(ValueError, match=rf"^{entry}: NULL or ragged "
+                       r"query vectors for 2 query ids \[2, 4\]"):
+        run(some, k=2)
+    all_null = spark.createDataFrame([(7, None), (8, None)], schema)
+    with pytest.raises(ValueError, match=rf"^{entry}: NULL or ragged "
+                       r"query vectors for 2 query ids \[7, 8\]"):
+        run(all_null, k=2)
+
+
+def test_ivf_knn_join_full_nprobe_equals_knn_join(spark, tmp_path):
+    """Exact kNN is the batch kernel over one cell that every query
+    probes: ivf_knn_join with nprobe=len(centroids) must return
+    knn_join's rows exactly — over a corpus with NULL and ragged
+    vectors (skipped by both) and rounded embeddings repeated every 17
+    ids, so the top-k cut falls inside cosine ties that only the id
+    order breaks."""
+    from embulk_filter_column_spark.operators.similarity import (
+        ivf_knn_join,
+        knn_join,
+        train_ivf_centroids,
+        write_ivf_table,
+    )
+
+    corpus = (spark.range(120)
+              .select(F.col("id").alias("vec_id"),
+                      F.when(F.col("id") % 23 == 0, F.lit(None))
+                       .when(F.col("id") == 7, F.array(F.lit(1.0)))
+                       .otherwise(F.transform(
+                           F.sequence(F.lit(1), F.lit(6)),
+                           lambda i: F.round(F.sin(
+                               i * (F.col("id") % 17 + 1) * 0.7), 1)))
+                      .alias("embedding")))
+    centroids = train_ivf_centroids(
+        corpus.where(F.size("embedding") == 6), n_centroids=4)
+    path = str(tmp_path / "ivf_table")
+    write_ivf_table(corpus, path, centroids)
+    queries = (corpus.where(F.col("vec_id").isin(1, 5, 18, 40, 77, 101))
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    exact = sorted(map(tuple, knn_join(corpus, queries, k=8).collect()))
+    ivf = sorted(map(tuple, ivf_knn_join(
+        spark, path, queries, centroids, k=8,
+        nprobe=len(centroids)).collect()))
+    assert len(exact) == 48
+    assert ivf == exact
 
 
 def test_redact_pii(spark):
@@ -1011,9 +1117,6 @@ def test_knn_join_chunked_and_string_ids(spark):
     assert sorted(map(tuple, many)) == sorted(map(tuple, one))
     assert len(one) == 15
     assert all(isinstance(r["vec_id"], str) for r in one)
-    # byte bound: 5 queries × 6 dims × 8 B = 240 B > 100 B cap
-    with pytest.raises(ValueError, match="max_query_bytes"):
-        knn_join(corpus, queries, k=3, max_query_bytes=100)
 
 
 def test_pack_documents_precomputed_counts_and_string_ids(spark):
