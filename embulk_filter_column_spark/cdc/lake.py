@@ -57,6 +57,12 @@ def _bucket(key: str, n: int):
 
 
 class MergeResult:
+    """What one ``merge`` did. ``rows_in`` is the batch's event count;
+    ``winners`` the batch's distinct keys and ``tombstones`` those of
+    them whose resolved op is 'D' — under ``"cow"`` and ``"delta"``
+    alike (the rows a cow rewrite carries over unchanged from the
+    touched buckets are not counted)."""
+
     def __init__(self, batch_id: int, snapshot_id: int, skipped: bool,
                  rows_in: int = 0, winners: int = 0, tombstones: int = 0,
                  buckets_touched: int = 0,
@@ -550,13 +556,16 @@ class LakeTable:
         # every figure rides ONE Observation at the top of the written
         # plan: one nested under the cow union goes unreported inside a
         # streaming foreachBatch, and Observation.get then blocks for
-        # ever
+        # ever. Only the batch's keys carry an event count (it is NULL
+        # on the cow rewrite's existing-only rows), so winners and
+        # tombstones count the batch under either mode
         obs = Observation()
+        in_batch = F.col(_KEY_EVENTS).isNotNull()
         combined = combined.observe(
             obs,
-            F.count(F.lit(1)).alias("winners"),
-            F.sum(F.when(F.col(OP_COL) == "D", 1).otherwise(0))
-             .alias("tombstones"),
+            F.count(_KEY_EVENTS).alias("winners"),
+            F.sum(F.when(in_batch & (F.col(OP_COL) == "D"), 1)
+                  .otherwise(0)).alias("tombstones"),
             F.sum(_KEY_EVENTS).alias("rows_in"),
             F.max(_KEY_EVENTS).alias("top_key_events")) \
             .drop(_KEY_EVENTS)

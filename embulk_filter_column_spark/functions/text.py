@@ -3,6 +3,13 @@
 All pure native Spark expressions (whole-stage codegen, zero Python in the
 hot path): tokenization, token counting, quality scoring, n-gram-heuristic
 language ID, rolling-hash document fingerprinting.
+
+Shingles come from one kernel: ``shingle_tokens`` is the one
+normalizing tokenizer, ``_ngrams`` the one sliding window with the
+short-document fallback, and ``_with_shingle_tokens`` binds the tokens
+once per row. ``word_ngrams``, ``word_ngram_hashes`` and
+``word_ngram_hashes_sized`` — and through them every MinHash, Jaccard
+and decontamination shingle set — are thin wrappers over it.
 """
 
 from __future__ import annotations
@@ -142,32 +149,58 @@ def doc_fingerprint(col) -> Column:
     return F.xxhash64(F.trim(normalized))
 
 
-def word_ngrams(col, n: int = 3) -> Column:
-    """Array of word n-gram strings (shingles) — the unit for MinHash /
-    Jaccard. Text is normalized (lowercase, punctuation stripped) the same
-    way as doc_fingerprint, so case/punctuation jitter doesn't perturb the
-    shingle set. Native HOF: transform over a sliding index sequence."""
+def shingle_tokens(col) -> Column:
+    """The dedup family's one normalizing tokenizer: lowercase, replace
+    every run of characters outside [a-z0-9] and whitespace with a
+    space, split on whitespace (empty strings removed). Every shingle
+    set (``word_ngrams``, ``word_ngram_hashes``,
+    ``word_ngram_hashes_sized``), the SimHash token stream and
+    decontamination's eval token count come from these tokens.
+    ``doc_fingerprint`` keeps its own ``[^a-z0-9]+`` form: it is the
+    persisted exact-dup key. NULL text gives a NULL array."""
     c = F.col(col) if isinstance(col, str) else col
-    toks0 = tokens(F.regexp_replace(F.lower(c), r"[^a-z0-9\s]+", " "))
+    return tokens(F.regexp_replace(F.lower(c), r"[^a-z0-9\s]+", " "))
 
-    def _build(toks):
-        # `toks` is a HOF lambda variable here, so every reference below
-        # is a cheap bound-variable read. Referencing the tokenization
-        # EXPRESSION directly instead re-evaluates regex+split+filter per
-        # shingle index inside the transform lambda — measured ~25× cost
-        # on 300-char docs.
-        count = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(count - n, F.lit(0)))
-        grams = F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        return F.when(count >= n, F.array_distinct(grams)) \
-            .otherwise(F.when(count > 0,
-                              F.array(F.concat_ws(" ", toks)))
-                       .otherwise(F.array().cast("array<string>")))
 
-    # let-binding via single-element transform: evaluate toks0 once per
-    # row and bind it for the shingle construction
-    return F.element_at(F.transform(F.array(toks0), _build), 1)
+def _ngrams(toks, n: int, gram, empty_type: str) -> Column:
+    """The one shingle window over a BOUND token array: the distinct
+    ``gram(joined n-token window)`` values, in first-occurrence order.
+    A doc with fewer than ``n`` tokens (but at least one) yields one
+    shingle of its whole token sequence; a token-less (or NULL) doc an
+    empty ``empty_type`` array. The window lambda takes ONE argument:
+    ``F.transform`` treats a two-argument lambda as (element, index)
+    and would overwrite a default-bound size with the index."""
+    count = F.size(toks)
+    idx = F.sequence(F.lit(0), F.greatest(count - n, F.lit(0)))
+    grams = F.transform(
+        idx, lambda i: gram(F.concat_ws(" ", F.slice(toks, i + 1, n))))
+    return F.when(count >= n, F.array_distinct(grams)) \
+        .otherwise(F.when(count > 0, F.array(gram(F.concat_ws(" ", toks))))
+                   .otherwise(F.array().cast(empty_type)))
+
+
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row: a
+    single-element ``transform`` binds it to a lambda variable, so
+    every reference inside ``body`` is a bound-variable read. Referring
+    to the tokenization EXPRESSION inside the window instead re-runs
+    regex+split+filter per shingle index — measured ~25× the cost on
+    300-char docs; HOF subtrees are not reliably CSE'd."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _with_shingle_tokens(col, build) -> Column:
+    """``build(toks)`` over the row's ``shingle_tokens``, bound once."""
+    return _let(shingle_tokens(col), build)
+
+
+def word_ngrams(col, n: int = 3) -> Column:
+    """Array of distinct word n-gram strings (shingles) of the
+    ``shingle_tokens`` — the unit for MinHash / Jaccard; case and
+    punctuation jitter doesn't perturb the set. Short and token-less
+    docs follow ``_ngrams``' fallback."""
+    return _with_shingle_tokens(
+        col, lambda toks: _ngrams(toks, n, lambda s: s, "array<string>"))
 
 
 def word_ngram_hashes(col, n: int = 3) -> Column:
@@ -181,21 +214,8 @@ def word_ngram_hashes(col, n: int = 3) -> Column:
     string sets except under a 64-bit collision inside one document
     pair's union — ~10⁻¹⁵ per pair at 10⁴ shingles/doc, the standard
     trade of production near-dup pipelines."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks0 = tokens(F.regexp_replace(F.lower(c), r"[^a-z0-9\s]+", " "))
-
-    def _build(toks):
-        count = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(count - n, F.lit(0)))
-        grams = F.transform(
-            idx, lambda i: F.xxhash64(F.concat_ws(" ",
-                                                  F.slice(toks, i + 1, n))))
-        return F.when(count >= n, F.array_distinct(grams)) \
-            .otherwise(F.when(count > 0,
-                              F.array(F.xxhash64(F.concat_ws(" ", toks))))
-                       .otherwise(F.array().cast("array<long>")))
-
-    return F.element_at(F.transform(F.array(toks0), _build), 1)
+    return _with_shingle_tokens(
+        col, lambda toks: _ngrams(toks, n, F.xxhash64, "array<long>"))
 
 
 def word_ngram_hashes_sized(col, main_n: int, extra_sizes) -> Column:
@@ -210,76 +230,18 @@ def word_ngram_hashes_sized(col, main_n: int, extra_sizes) -> Column:
     extra = sorted({int(s) for s in extra_sizes})
     if main_n < 1 or (extra and extra[0] < 1):
         raise ValueError("shingle sizes must be >= 1")
-    c = F.col(col) if isinstance(col, str) else col
-    toks0 = tokens(F.regexp_replace(F.lower(c), r"[^a-z0-9\s]+", " "))
 
     def _build(toks):
-        count = F.size(toks)
+        extras = [_ngrams(toks, s, F.xxhash64, "array<long>")
+                  for s in extra]
+        # the main-size array is referenced by both struct fields
+        return _let(_ngrams(toks, main_n, F.xxhash64, "array<long>"),
+                    lambda m: F.struct(
+                        F.array_distinct(F.flatten(F.array(m, *extras)))
+                         .alias("sh"),
+                        F.size(m).alias("n")))
 
-        def _one(n):
-            idx = F.sequence(F.lit(0), F.greatest(count - n, F.lit(0)))
-            grams = F.transform(
-                idx, lambda i: F.xxhash64(
-                    F.concat_ws(" ", F.slice(toks, i + 1, n))))
-            return F.when(count >= n, F.array_distinct(grams)) \
-                .otherwise(F.when(count > 0,
-                                  F.array(F.xxhash64(
-                                      F.concat_ws(" ", toks))))
-                           .otherwise(F.array().cast("array<long>")))
-
-        extras = [_one(n) for n in extra]
-        # bind the main-size array once (same let-binding-via-transform
-        # trick as the tokenization): it is referenced by both struct
-        # fields, and HOF subtrees are not reliably CSE'd
-        return F.element_at(
-            F.transform(
-                F.array(_one(main_n)),
-                lambda m: F.struct(
-                    F.array_distinct(F.flatten(F.array(m, *extras)))
-                     .alias("sh"),
-                    F.size(m).alias("n"))),
-            1)
-
-    return F.element_at(F.transform(F.array(toks0), _build), 1)
-
-
-def word_ngrams_multi(col, sizes) -> Column:
-    """Distinct word n-gram shingles at EVERY size in ``sizes``, from ONE
-    tokenization per row (``word_ngrams`` called per size would re-run
-    regex+split+filter once per size). Per-size semantics match
-    ``word_ngrams`` exactly, including the short-document fallback (a doc
-    with fewer tokens than a size contributes its whole token sequence
-    for that size). Used by ``decontaminate`` to index training docs at
-    the shingle sizes its short eval items actually have (ADVICE r4:
-    eval items under shingle_n tokens were invisible at the default
-    n=13)."""
-    sizes = sorted({int(s) for s in sizes})
-    if not sizes or sizes[0] < 1:
-        raise ValueError("sizes must be a non-empty set of ints >= 1")
-    c = F.col(col) if isinstance(col, str) else col
-    toks0 = tokens(F.regexp_replace(F.lower(c), r"[^a-z0-9\s]+", " "))
-
-    def _build(toks):
-        count = F.size(toks)
-
-        def _gram_fn(n):
-            # a one-arg lambda per size: F.transform treats a TWO-arg
-            # lambda as (element, index) — a `n=n` default would be
-            # silently overwritten by the array index
-            return lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
-
-        parts = []
-        for n in sizes:
-            idx = F.sequence(F.lit(0), F.greatest(count - n, F.lit(0)))
-            grams = F.transform(idx, _gram_fn(n))
-            parts.append(
-                F.when(count >= n, grams)
-                 .otherwise(F.when(count > 0,
-                                   F.array(F.concat_ws(" ", toks)))
-                            .otherwise(F.array().cast("array<string>"))))
-        return F.array_distinct(F.flatten(F.array(*parts)))
-
-    return F.element_at(F.transform(F.array(toks0), _build), 1)
+    return _with_shingle_tokens(col, _build)
 
 
 # ---------------------------------------------------------------------------

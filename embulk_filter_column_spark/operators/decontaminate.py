@@ -14,11 +14,12 @@ benchmark question verbatim leaks the entire question, yet scores
 exactly where the document is long. ``normalize="train"`` (|∩|/|T|)
 is available for the converse question — "is this training doc
 mostly made of eval material?" — useful for near-dup pruning of eval
-copies. Shingling is the same normalized ``word_ngrams`` the whole
-dedup family uses, so case/punctuation jitter can't hide
-contamination. A doc is contaminated when its best-matching eval doc
-reaches ``threshold``; the output reports that eval doc (ties broken
-by min eval id) and the overlap fraction.
+copies. Both sides are shingled by ``_shingle_docs`` — the hashed
+``shingle_tokens`` n-grams the whole dedup family uses — so
+case/punctuation jitter can't hide contamination. A doc is
+contaminated when its best-matching eval doc reaches ``threshold``;
+the output reports that eval doc (ties broken by min eval id) and the
+overlap fraction.
 
 Scale design (10^10 train docs × 10^3..10^5 eval docs):
 
@@ -36,9 +37,10 @@ Scale design (10^10 train docs × 10^3..10^5 eval docs):
   synthetic corpora should pass a smaller n explicitly.
 
 Short eval items (ADVICE r4): an eval doc with fewer than ``shingle_n``
-tokens shingles — via ``word_ngrams``' fallback — to ONE whole-text
-shingle of its own token count, which no ``shingle_n``-gram of a longer
-training doc can ever equal: a 10-token benchmark question would be
+tokens shingles — via the shingle window's short-document fallback
+(``functions.text._ngrams``) — to ONE whole-text shingle of its own
+token count, which no ``shingle_n``-gram of a longer training doc can
+ever equal: a 10-token benchmark question would be
 invisible to the pass at n=13. With ``cover_short_eval=True`` (default)
 the operator collects the distinct short sizes actually present in the
 eval set (a tiny eval-side aggregation — at most ``shingle_n - 1``
@@ -55,8 +57,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens, word_ngram_hashes_sized
-from .dedup import _shingle_docs, _widen
+from ..functions.text import shingle_tokens
+from .dedup import _shingle_docs
 
 
 def decontaminate(train: DataFrame, eval_df: DataFrame,
@@ -114,32 +116,17 @@ def decontaminate(train: DataFrame, eval_df: DataFrame,
         # the distinct sub-shingle_n token counts present in the eval
         # set — an eval-side-only aggregation (small by definition)
         # yielding at most shingle_n - 1 values
-        tok_n = F.size(tokens(F.regexp_replace(
-            F.lower(F.col(eval_text_col)), r"[^a-z0-9\s]+", " ")))
+        tok_n = F.size(shingle_tokens(eval_text_col))
         short_sizes = sorted(
             r["s"] for r in eval_df.select(tok_n.alias("s"))
             .where((F.col("s") > 0) & (F.col("s") < shingle_n))
             .distinct().collect())
-    if short_sizes:
-        # ONE train-side tokenization: main-size shingles (the
-        # normalize="train" denominator) plus the short eval sizes'
-        # shingles, per-doc distinct across sizes, built together by
-        # word_ngram_hashes_sized (the two-expression form tokenized
-        # the corpus twice). Shingles ride as 64-bit hashes (the same
-        # representation _shingle_docs uses): equal-length shingle
-        # strings can't cross-match sizes, and hashes inherit that up
-        # to a ~10⁻¹⁹ 64-bit collision (word_ngram_hashes docstring) —
-        # while the exploded inverted-index join below ships 8-byte
-        # keys instead of shingle text
-        base = _widen(train.select(F.col(id_col), F.col(text_col)))
-        tr = (base
-              .withColumn("_s", word_ngram_hashes_sized(
-                  text_col, shingle_n, short_sizes))
-              .select(F.col(id_col),
-                      F.col("_s.sh").alias("sh"),
-                      F.col("_s.n").alias("n")))
-    else:
-        tr = _shingle_docs(train, text_col, id_col, shingle_n)
+    # ONE train-side tokenization: main-size shingles (the
+    # normalize="train" denominator) plus the short eval sizes'
+    # shingles, per-doc distinct across sizes. Equal-length shingle
+    # strings can't cross-match sizes, and the 64-bit hashes inherit
+    # that up to a ~10⁻¹⁹ collision (word_ngram_hashes docstring)
+    tr = _shingle_docs(train, text_col, id_col, shingle_n, short_sizes)
     ev = _shingle_docs(eval_df, eval_text_col, eval_id_col, shingle_n)
     ev_sizes = (ev.select(F.col(eval_id_col).alias("eval_id"),
                           F.col("n").alias("_en")))

@@ -369,8 +369,8 @@ class MinHashIndex(_JournaledIndex):
     (``dedup.minhash_band_keys`` is ``minhash_band_keys_from_shingles``
     over ``_shingle_docs``, so index and one-shot blocker are
     probe-compatible at equal parameters); cross-batch candidates from
-    the pruned band probe; both verify with one native
-    ``array_intersect`` — recall follows LSH band math ((1-j^rows)^bands
+    the pruned band probe; both verify with the one-shot blockers'
+    ``_verify_jaccard`` — recall follows LSH band math ((1-j^rows)^bands
     miss probability), exactness inside candidates is total.
     Token-less docs carry no signature: they are returned as survivors
     but not indexed (run exact dedup first to collapse empty texts).
@@ -479,16 +479,8 @@ class MinHashIndex(_JournaledIndex):
                         .distinct().collect()]
             olds = self._doc_slice(obuckets, id_field)
             if olds is not None:
-                olds = olds.select(F.col(id_col).alias("a"),
-                                   F.col("sh").alias("sa"),
-                                   F.col("n").alias("na"))
-                news = shingled.select(F.col(id_col).alias("b"),
-                                       F.col("sh").alias("sb"),
-                                       F.col("n").alias("nb"))
-                inter = F.size(F.array_intersect("sa", "sb"))
-                jac = inter / (F.col("na") + F.col("nb") - inter)
-                dropped_cross = (cross.join(olds, "a").join(news, "b")
-                                 .where(jac >= self.threshold)
+                dropped_cross = (_verify_jaccard(cross, shingled, id_col,
+                                                 self.threshold, a_side=olds)
                                  .select(F.col("b").alias(id_col))
                                  .distinct())
                 dropped = dropped.unionByName(dropped_cross).distinct()

@@ -28,6 +28,7 @@ rounded cosine desc, id asc, top-``k``.
 
 from __future__ import annotations
 
+import collections
 import functools
 
 from pyspark.sql import DataFrame
@@ -137,11 +138,20 @@ def train_ivf_centroids(df: DataFrame, n_centroids: int = 16,
     normalized so nearest-centroid-by-dot == nearest-by-cosine. Training
     runs driver-side on the bounded sample (the standard IVF recipe —
     Faiss trains on samples too); assignment and search stay distributed.
-    Returns an (n_centroids, dim) numpy array of unit vectors."""
+    Returns an (n_centroids, dim) numpy array of unit vectors. NULL
+    vectors are left out of the sample (``ivf_assign`` gives them a
+    NULL cell); empty sampled vectors, or ones whose length differs
+    from the most common one, raise ``ValueError`` naming their ids."""
     import numpy as np
 
-    rows = (df.select(id_col, vec_col).orderBy(id_col)
-            .limit(sample).collect())
+    rows = (df.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
+            .orderBy(id_col).limit(sample).collect())
+    dim, bad = _odd_vector_ids(rows)
+    if bad:
+        raise ValueError(
+            "train_ivf_centroids: empty or ragged sample vectors for %d "
+            "ids %s — the sample needs vectors of one dimension (%d)"
+            % (len(bad), bad[:10], dim))
     mat = np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     rng = np.random.RandomState(seed)
@@ -250,6 +260,15 @@ def _rank_order(ids, cos, k: int):
     return order[:k]
 
 
+def _odd_vector_ids(rows):
+    """``(dim, ids)`` over collected ``(id, vector)`` rows: ``dim`` is
+    the most common non-empty vector length, ``ids`` those whose
+    vector is NULL, empty or of another length (a ragged vector)."""
+    dims = collections.Counter(len(r[1]) for r in rows if r[1])
+    dim = dims.most_common(1)[0][0] if dims else 0
+    return dim, [r[0] for r in rows if not r[1] or len(r[1]) != dim]
+
+
 def _query_matrix(op: str, queries: DataFrame, query_id_col: str,
                   query_vec_col: str, max_queries: int,
                   max_query_bytes: int):
@@ -259,8 +278,6 @@ def _query_matrix(op: str, queries: DataFrame, query_id_col: str,
     × 8: 100k rows at dim 4096 is 3 GB closed over into every task).
     The query side is caller input, so NULL, empty or ragged query
     vectors raise ``ValueError`` naming their query ids."""
-    import collections
-
     import numpy as np
 
     q_rows = (queries.select(query_id_col, query_vec_col)
@@ -270,9 +287,7 @@ def _query_matrix(op: str, queries: DataFrame, query_id_col: str,
             "%s collected more than max_queries=%d query vectors — "
             "queries must be the small side: swap the sides, batch the "
             "query side or raise the bound" % (op, max_queries))
-    dims = collections.Counter(len(r[1]) for r in q_rows if r[1])
-    dim = dims.most_common(1)[0][0] if dims else 0
-    bad = [r[0] for r in q_rows if not r[1] or len(r[1]) != dim]
+    dim, bad = _odd_vector_ids(q_rows)
     if bad:
         raise ValueError(
             "%s: NULL or ragged query vectors for %d query ids %s — "

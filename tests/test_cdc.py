@@ -749,6 +749,33 @@ def test_auto_salting_lags_one_batch(spark, tmp_path):
         assert observed == {(1000, 201, 600)}, (mode, observed)
 
 
+@pytest.mark.parametrize("mode", ["cow", "delta"])
+def test_merge_counts_only_the_batch_keys(spark, tmp_path, mode):
+    """MergeResult.winners / tombstones are the batch's keys and their
+    resolved 'D' ops under both merge modes: a cow rewrite of a 20-row
+    bucket (one row a tombstone) must not count the rows it carries
+    over."""
+    from pyspark.sql import functions as F
+
+    def events(keys, op, seq):
+        return spark.createDataFrame(
+            [(op, seq + k, "https://u%d.example.com/" % k, "t%d" % k)
+             for k in keys], "op string, seq long, url string, text string") \
+            .withColumn("warc_ts", F.timestamp_seconds(
+                F.lit(1_700_000_000) + F.col("seq")))
+
+    seed = events(range(19), "I", 0).unionByName(events([19], "D", 0))
+    lake = LakeTable.create(spark, str(tmp_path / "lake"),
+                            seed.drop("op").schema, num_buckets=1)
+    r = lake.merge(seed, 1, mode=mode)
+    assert (r.rows_in, r.winners, r.tombstones) == (20, 20, 1)
+    r = lake.merge(events([100], "I", 1000), 2, mode=mode)
+    assert (r.rows_in, r.winners, r.tombstones) == (1, 1, 0)
+    r = lake.merge(events([3, 3], "D", 1000), 3, mode=mode)
+    assert (r.rows_in, r.winners, r.tombstones) == (2, 1, 1)
+    assert lake.read().count() == 19
+
+
 def _batch_jobs(spark, group, fn):
     """Spark jobs ``fn`` runs, counted through its own job group."""
     sc = spark.sparkContext

@@ -700,8 +700,9 @@ def test_ivf_knn_join_full_nprobe_equals_knn_join(spark, tmp_path):
                            lambda i: F.round(F.sin(
                                i * (F.col("id") % 17 + 1) * 0.7), 1)))
                       .alias("embedding")))
+    # NULL vectors are skipped by training; the ragged one would raise
     centroids = train_ivf_centroids(
-        corpus.where(F.size("embedding") == 6), n_centroids=4)
+        corpus.where(F.col("vec_id") != 7), n_centroids=4)
     path = str(tmp_path / "ivf_table")
     write_ivf_table(corpus, path, centroids)
     queries = (corpus.where(F.col("vec_id").isin(1, 5, 18, 40, 77, 101))
@@ -712,6 +713,31 @@ def test_ivf_knn_join_full_nprobe_equals_knn_join(spark, tmp_path):
         nprobe=len(centroids)).collect()))
     assert len(exact) == 48
     assert ivf == exact
+
+
+def test_train_ivf_centroids_skips_null_and_rejects_ragged(spark):
+    """A NULL vector in the training sample is left out (ivf_assign
+    gives it a NULL cell); vectors of differing lengths raise a
+    ValueError naming the op and the odd ids, not numpy's
+    inhomogeneous-shape error."""
+    import numpy as np
+
+    from embulk_filter_column_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
+                               schema)
+    centroids = train_ivf_centroids(df, n_centroids=2)
+    assert centroids.shape == (2, 2)
+    assert sorted(map(tuple, np.round(centroids, 6))) == \
+        [(0.0, 1.0), (1.0, 0.0)]
+    ragged = df.unionByName(spark.createDataFrame(
+        [(4, [1.0, 0.0, 0.0]), (5, [0.0, 0.0])], schema))
+    with pytest.raises(ValueError,
+                       match=r"^train_ivf_centroids: .* 1 ids \[4\]"):
+        train_ivf_centroids(ragged, n_centroids=2)
 
 
 def test_redact_pii(spark):
@@ -1265,10 +1291,6 @@ def test_decontaminate_short_eval_items_are_covered(spark):
     a verbatim 2-token leak flags at overlap 1.0 even at n=13; the
     opt-out restores the old blindness; multi-size indexing never
     cross-matches sizes (string equality implies equal token counts)."""
-    from embulk_filter_column_spark.functions.text import (
-        word_ngrams,
-        word_ngrams_multi,
-    )
     from embulk_filter_column_spark.operators import decontaminate
 
     filler = " ".join(f"filler{i} word{i}" for i in range(30))
@@ -1296,17 +1318,6 @@ def test_decontaminate_short_eval_items_are_covered(spark):
                                   threshold=0.9,
                                   cover_short_eval=False).collect()}
     assert off == {3: 101}
-    # word_ngrams_multi == union of word_ngrams at each size (one
-    # tokenization), including the per-size short-doc fallback
-    df = spark.createDataFrame(
-        [("alpha beta gamma delta",), ("one",), ("",)], ["text"])
-    rows = df.select(
-        F.array_sort(word_ngrams_multi("text", [2, 3])).alias("multi"),
-        F.array_sort(F.array_distinct(F.concat(
-            word_ngrams("text", 2), word_ngrams("text", 3))))
-         .alias("union")).collect()
-    for r in rows:
-        assert r["multi"] == r["union"]
 
 
 def test_split_corpus_layout_independent_and_proportional(spark):

@@ -8,6 +8,8 @@ planted near-duplicates).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,6 +41,29 @@ TEXTS = [
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(TEXTS, "doc_id long, text string")
+
+
+def _py_shingles(text, n):
+    """Independent reference shingler: lowercase, every run outside
+    [a-z0-9] and ASCII whitespace becomes a space, whitespace tokens,
+    distinct n-token windows in first-occurrence order; fewer than n
+    tokens give the whole token sequence, none give no shingle."""
+    if text is None:
+        return []
+    toks = re.sub(r"[^a-z0-9 \t\n\x0b\f\r]+", " ", text.lower()).split()
+    if len(toks) < n:
+        return [" ".join(toks)] if toks else []
+    grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+    return list(dict.fromkeys(grams))
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_word_ngrams_matches_python_shingler(docs, n):
+    """word_ngrams, now a thin wrapper over the shared shingle kernel,
+    equals the pure-Python reference — order included."""
+    for r in docs.select("text", word_ngrams("text", n).alias("g")) \
+            .collect():
+        assert r["g"] == _py_shingles(r["text"], n), r["text"]
 
 
 def test_word_ngram_hashes_equals_hashed_word_ngrams(docs):
@@ -82,7 +107,7 @@ def test_minhash_sig_fold_equals_per_function_min(docs):
     def _hash_fn(salt):
         # factory, NOT a two-arg lambda with a default: F.transform
         # treats a two-arg lambda as (element, index) and silently
-        # overwrites the default (same trap word_ngrams_multi documents)
+        # overwrites the default (same trap ``_ngrams`` documents)
         return lambda h: F.xxhash64(h, F.lit(salt))
 
     ref_sig = F.array(*[

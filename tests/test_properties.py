@@ -99,6 +99,39 @@ def test_prop_normalization_invariance(spark, texts):
         assert a["simhash"] == b["simhash"]
 
 
+# tab, U+0130 and U+212A (lowercase into ASCII), punctuation and
+# non-ASCII letters (no token) next to plain ASCII
+_shingle_alphabet = "aZ9 \t\n.,!?'\u0130\u212a\u00e9\u00df\u0436"
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(st.one_of(st.none(),
+                          st.text(alphabet=_shingle_alphabet, max_size=10)),
+                min_size=1, max_size=12))
+def test_prop_has_tokens_twins_shingle_tokens(spark, texts):
+    """``_has_tokens`` (one rlike) is the cheap twin of the shingle
+    tokenizer: it holds exactly when ``shingle_tokens`` is non-empty,
+    which is exactly when the doc has shingles (NULL: none of them)."""
+    from pyspark.sql import functions as F
+
+    from embulk_filter_column_spark.functions.text import (
+        shingle_tokens,
+        word_ngram_hashes,
+    )
+    from embulk_filter_column_spark.operators.dedup import _has_tokens
+
+    pinned = ["\t", "\u0130", "\u212a", "?!.", "\u00e9\u00df\u0436", None]
+    df = spark.createDataFrame(list(enumerate(texts + pinned)),
+                               "doc_id long, text string")
+    for r in df.select(
+            "text", _has_tokens("text").alias("has"),
+            (F.size(shingle_tokens("text")) > 0).alias("toks"),
+            (F.size(word_ngram_hashes("text", 3)) > 0).alias("sh"),
+    ).collect():
+        assert bool(r["has"]) == bool(r["toks"]) == bool(r["sh"]), r
+
+
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.data())

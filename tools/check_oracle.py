@@ -52,6 +52,11 @@ def main():
 
     import __spark_entry__ as entry
 
+    qs = entry.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+
     spark = (SparkSession.builder.master("local[8]")
              .appName("oracle-check")
              .config("spark.sql.session.timeZone", "UTC")
@@ -66,7 +71,6 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
     for name, fn in qs.items():
